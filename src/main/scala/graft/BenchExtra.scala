@@ -2,15 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Optimization-round measurement harness (guide §1) — SEPARATE from the
  * frozen graft.Bench: per-query min-of-N timing (noise-robust on a
  * co-tenant host), optional noop-sink action (§1.4: computes every column,
  * no count-pruning), optional formatted-plan dump for the plans/ evidence
- * files. Same session setup and same per-query `count()` action as Bench
- * by default, so numbers are directly comparable.
+ * files. Same per-query `count()` action as Bench by default, but on the
+ * product's session (`pipeline.Sessions.local`), so it measures the
+ * settings the product runs with; the frozen Bench keeps its own builder.
  *
  * Env knobs:
  *   SPARK_GRAFT_SF_DIR    data dir (default /root/testdata/sf0.1)
@@ -24,19 +23,13 @@ object BenchExtra {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val action = sys.env.getOrElse("SPARK_GRAFT_ACTION", "count")
     val plansDir = sys.env.get("SPARK_GRAFT_PLANS_DIR")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = pipeline.Sessions.local(cpus, app = "graft-bench-extra")
     spark.sparkContext.setLogLevel("WARN")
 
     // warm-up (JIT + codegen + FS), excluded from all timings — as Bench

@@ -10,6 +10,15 @@ import pipeline.stages.{Aggregate, Enrich, Parse, Route, RouteRule}
 
 /** SparkSession factory with the scale-oriented defaults used everywhere. */
 object Sessions {
+
+  /** Entries in the JVM-wide compiled-class cache of Catalyst's code
+    * generator, keyed by (class loader, generated source). Spark's default
+    * of 100 is below the working set of one unit of work — a corpus config
+    * run needs ~130 classes, a 69-query pass ~670 — so the LRU evicted every
+    * class before its reuse and each batch recompiled all of them. 2000 is
+    * about 3× the largest working set measured. */
+  private val CodegenCacheEntries = 2000
+
   def local(cores: Int, shufflePartitions: Int = -1,
             app: String = "graft-pipeline"): SparkSession = {
     val sp = if (shufflePartitions > 0) shufflePartitions else cores
@@ -22,6 +31,13 @@ object Sessions {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // Artifact isolation gives every cloned session (each streaming
+      // query runs on one) its own executor class loader, hence new
+      // codegen cache keys: a restarted stream recompiled every
+      // executor-side class. The program adds no per-session jars or
+      // classes, so isolation buys it nothing.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
   }
 }
@@ -132,16 +148,8 @@ object Pipeline {
     val sinkNames = sinkNamesFor(rules)
     val io = new ParquetTableIO(outDir)
     val schema = routed.schema // explicit on read-back: empty writes have no files to infer from
-    def phase[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (sys.env.contains("GRAFT_PHASE_TIMING"))
-        println(f"[fused] $name%-12s ${(System.nanoTime() - t0) / 1e9}%8.2fs")
-      r
-    }
-    val counts = phase("write")(
-      countedWrite(routed, sinkNames, io, "routed")).filter(_._2 > 0)
-    if (audit) phase("audit") {
+    val counts = countedWrite(routed, sinkNames, io, "routed").filter(_._2 > 0)
+    if (audit) {
       val readBack = Aggregate.sinkCounts(
         spark.read.schema(schema).parquet(s"$outDir/routed"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

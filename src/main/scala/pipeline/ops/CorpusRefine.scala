@@ -3,6 +3,7 @@ package pipeline.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import Portable._
 
@@ -395,6 +396,20 @@ object CorpusRefine {
                               carryCols: Seq[String],
                               nullGuard: Option[(String, String)] = None): DataFrame = {
     require(buckets > 0, s"bad buckets=$buckets")
+    // the reuse guard below hashes every carry column, and Spark rejects
+    // hash() over map values: fail here, naming the column, not in analysis
+    def hasMap(t: DataType): Boolean = t match {
+      case _: MapType => true
+      case a: ArrayType => hasMap(a.elementType)
+      case st: StructType => st.fields.exists(f => hasMap(f.dataType))
+      case _ => false
+    }
+    (idCol +: carryCols).foreach { c =>
+      val t = df.schema(c).dataType
+      require(!hasMap(t), s"carry column '$c' has type ${t.simpleString}: " +
+        "map values cannot be carried (Spark cannot hash them); convert with " +
+        "map_entries or drop the column before packing")
+    }
     // nullGuard (column, message): callers that must reject null payload
     // rows (packSequences) ride the validation on THIS one-row aggregate
     // instead of a separate filter+count job — that job was a full extra

@@ -391,6 +391,10 @@ object Dedup {
     // broadcastable anyway — the shuffle join IS the scale-correct plan.
     // Session-scoped confs, so concurrent queries on this session during
     // the loop see them too — acceptable for a batch backfill operator.
+    // That includes spark.sql.shuffle.partitions, which drops to
+    // loopPartitions (down to 1 for a small graph): a query planned on this
+    // session while the loop runs shuffles that narrowly too. All three
+    // are restored in the finally below.
     val prevAqe = sess.conf.get("spark.sql.adaptive.enabled", "true")
     val prevBc = sess.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     val prevParts = sess.conf.get("spark.sql.shuffle.partitions", "200")

@@ -211,7 +211,15 @@ object NgramLm {
    * null language value (the empty-filter quantile returned an empty
    * array). Null-language docs now form their own quantile group and
    * bucket among themselves; the join key is null-safe (`<=>`).
-   * Deterministic given the detail frame.
+   * Deterministic given the detail frame and its partitioning.
+   *
+   * Threshold shift vs round 6: the cuts now come from a merged
+   * `percentile_approx` sketch (accuracy 10000, i.e. rank error ≤ 1/10000
+   * of a language's docs) instead of per-language `approxQuantile` at
+   * relative error 0.001. Docs within that rank error of a tercile cut can
+   * change head/middle/tail assignment against round-6 output, and since
+   * sketch merge order follows the partitioning, a repartitioned detail
+   * frame can move them too. Docs away from the cuts bucket identically.
    */
   def pplBuckets(detail: DataFrame, langCol: String): DataFrame = {
     val withPpl = perplexity(detail).filter(col("ppl").isNotNull)

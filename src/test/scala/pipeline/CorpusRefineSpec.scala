@@ -268,6 +268,17 @@ class CorpusRefineSpec extends AnyFunSuite {
     assert(err.getMessage.contains("null id"), err.getMessage)
   }
 
+  test("packTokenShards: a map-typed carry column fails naming the column and type") {
+    val s = sc
+    import s.implicits._
+    val d = (0L until 20L).map(i => (i, 3L, Map("k" -> i))).toDF("doc_id", "n_tokens", "meta")
+    val err = intercept[IllegalArgumentException] {
+      CorpusRefine.packTokenShards(d, "doc_id", "n_tokens", 50L, 4, carryCols = Seq("meta"))
+    }
+    assert(err.getMessage.contains("carry column 'meta'") &&
+      err.getMessage.contains("map<string,bigint>"), err.getMessage)
+  }
+
   test("packSequences: fixed-length chunks equal the single-threaded concat reference") {
     val s = sc
     import s.implicits._

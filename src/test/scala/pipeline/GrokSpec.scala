@@ -269,7 +269,11 @@ class GrokSpec extends AnyFunSuite {
       // exact-duplicate headers at a later instant: a RANGE frame made
       // them running-count PEERS and merged them into one record
       ("u1", later, "com.app.Other: dup", "en"),
-      ("u1", later, "com.app.Other: dup", "en"))
+      ("u1", later, "com.app.Other: dup", "en"),
+      // a trailing frame of the boom throwable whose coarse ts ticked over
+      // to the NEXT header's instant: header-first glues it FORWARD onto
+      // that header (pinned; the doc shape cannot tell the two apart)
+      ("u1", later, "\tat com.app.C.h(C.java:3)", "en"))
       .toDF("url", "warc_ts", "text", "lang")
       .withColumn("html", lit(null).cast("binary"))
     val got = pipeline.stages.Multiline.joinDocs(docs)
@@ -277,7 +281,7 @@ class GrokSpec extends AnyFunSuite {
     assert(got.toSeq == Seq(
       "com.app.Err: boom\n\tat com.app.A.f(A.java:1)\n\tat com.app.B.g(B.java:2)",
       "com.app.Other: dup",
-      "com.app.Other: dup",
+      "com.app.Other: dup\n\tat com.app.C.h(C.java:3)",
       "zz earlier event"), got.mkString("|"))
   }
 
