@@ -204,9 +204,10 @@ object DedupBench {
 
     // --mode streamnear: streaming approximate near-dup throughput — the
     // NearDedup stateful band-owner pass + per-micro-batch finalize over a
-    // landing directory, sink writes excluded (the write path is the
-    // sandbox's throttle-prone disk, BASELINE.md; this isolates the
-    // OPERATOR). Run at two --cores levels for the N→4N story.
+    // landing directory, sink writes excluded (this isolates the OPERATOR;
+    // what slowed the write path at small scale was forked chmod/readlink
+    // processes, not the disk: BASELINE.md, "write-phase-forks" note).
+    // Run at two --cores levels for the N→4N story.
     if (conf.get("--mode").contains("streamnear")) {
       val landing = s"/tmp/graft-streamnear-$n"
       val landed = materialized(landing) {

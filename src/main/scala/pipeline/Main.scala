@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import pipeline.fixtures.Webtext
-import pipeline.io.{Ledger, ParquetTableIO}
+import pipeline.io.{Ledger, NioLocalFileSystem, NioLocalFs, ParquetTableIO}
 import pipeline.model.Sinks
 import pipeline.stages.{Aggregate, Enrich, Parse, Route, RouteRule}
 
@@ -38,6 +38,10 @@ object Sessions {
       // executor-side class. The program adds no per-session jars or
       // classes, so isolation buys it nothing.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // Hadoop's `file:` scheme without a forked chmod/readlink per file
+      // (this Hadoop has no libhadoop); checksums and modes as stock.
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
       .getOrCreate()
   }
 }

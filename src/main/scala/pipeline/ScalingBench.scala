@@ -59,7 +59,8 @@ object ScalingBench {
 
     // phase B — the full daemon analog: same plus salted repartition +
     // partitioned sink write + read-back accounting + ledger commit
-    // (skippable: sandbox disk throttles over time, see BASELINE.md)
+    // (skippable via GRAFT_AGG_ONLY; on the write phase's off-CPU time see
+    // BASELINE.md, "write-phase-forks" note)
     if (sys.env.contains("GRAFT_AGG_ONLY")) {
       println(
         s"""{"bench":"scaling","cores":$cores,"input_rows":$inRows,"agg_sec":${"%.3f".format(secA)},"agg_docs_per_sec":${"%.1f".format(inRows / secA)}}""")
