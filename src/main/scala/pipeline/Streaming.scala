@@ -86,7 +86,6 @@ object Streaming {
                 trigger: Trigger = Trigger.AvailableNow(),
                 rules: Seq[stages.RouteRule] = stages.Route.defaultRules,
                 metricsDir: String = ""): StreamingQuery = {
-    val ledger = new io.Ledger(outDir)
     // query name: the metrics table's `query` column must correlate the
     // listener's input/late rows (keyed by progress.name) with the
     // foreachBatch sink rows. Derived from outDir so it is (a) STABLE
@@ -98,9 +97,7 @@ object Streaming {
     // (default: this query's outDir): the sinkWriter role fence keys every
     // row by this query, so N queries writing one table stay disjoint.
     val qname = f"routed_docs_${outDir.hashCode & 0x7fffffff}%08x"
-    val metrics = streaming.StreamMetrics.sinkWriter(
-      if (metricsDir.nonEmpty) metricsDir else outDir, qname)
-    val sinkNames = Pipeline.sinkNamesFor(rules)
+    val writeBatch = routedBatchWriter(outDir, qname, rules, metricsDir)
     docStream
       // streaming metrics surface: the same observe() counters as the batch
       // path, reported per micro-batch in StreamingQueryProgress
@@ -111,29 +108,42 @@ object Streaming {
       .queryName(qname)
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val obs = org.apache.spark.sql.Observation()
-        val routed = Pipeline.observeSinkCounts(
-          Pipeline.transform(batch, rules = rules)
-            .select(col("url"), col("warc_ts"), col("lang"), col("source"),
-              col("host"), col("title"), col("status"), col("extracted_text"),
-              col("is_corrupt"), col("sink"), col("day")),
-          obs, sinkNames)
-        routed.write.mode("overwrite")
-          .partitionBy("sink")
-          .parquet(s"$outDir/routed_stream/batch=$batchId")
-        val counts = Pipeline.observedSinkCounts(obs, sinkNames).filter(_._2 > 0)
-        ledger.commit(s"batch-$batchId", counts.values.sum, counts)
-        // per-sink rows into the queryable metrics table — the same
-        // numbers the ledger just committed (reconciliation is asserted
-        // in StreamingSpec); `input`/`late` rows come from the progress
-        // listener (streaming.StreamMetrics.attach)
-        counts.foreach { case (sink, n) =>
-          metrics.append(batchId, qname, "sink", sink, n)
-        }
-        ()
-      }
+      .foreachBatch(writeBatch)
       .start()
+  }
+
+  /** The micro-batch body of every routed-docs daemon ([[startDocs]],
+    * [[startDocsNearDedup]]): the batch stage chain, a partitioned write
+    * under `routed_stream/batch=<id>`, a ledger commit (unit
+    * "batch-<id>") and per-sink rows into the metrics table. */
+  private def routedBatchWriter(outDir: String, qname: String,
+                                rules: Seq[stages.RouteRule],
+                                metricsDir: String): (DataFrame, Long) => Unit = {
+    val ledger = new io.Ledger(outDir)
+    val metrics = streaming.StreamMetrics.sinkWriter(
+      if (metricsDir.nonEmpty) metricsDir else outDir, qname)
+    val sinkNames = Pipeline.sinkNamesFor(rules)
+    (batch, batchId) => {
+      val obs = org.apache.spark.sql.Observation()
+      val routed = Pipeline.observeSinkCounts(
+        Pipeline.transform(batch, rules = rules)
+          .select(col("url"), col("warc_ts"), col("lang"), col("source"),
+            col("host"), col("title"), col("status"), col("extracted_text"),
+            col("is_corrupt"), col("sink"), col("day")),
+        obs, sinkNames)
+      routed.write.mode("overwrite")
+        .partitionBy("sink")
+        .parquet(s"$outDir/routed_stream/batch=$batchId")
+      val counts = Pipeline.observedSinkCounts(obs, sinkNames).filter(_._2 > 0)
+      ledger.commit(s"batch-$batchId", counts.values.sum, counts)
+      // per-sink rows into the queryable metrics table — the same
+      // numbers the ledger just committed (reconciliation is asserted
+      // in StreamingSpec); `input`/`late` rows come from the progress
+      // listener (streaming.StreamMetrics.attach)
+      counts.foreach { case (sink, n) =>
+        metrics.append(batchId, qname, "sink", sink, n)
+      }
+    }
   }
 
   /**
@@ -153,11 +163,8 @@ object Streaming {
                          trigger: Trigger = Trigger.AvailableNow(),
                          rules: Seq[stages.RouteRule] = stages.Route.defaultRules,
                          metricsDir: String = ""): StreamingQuery = {
-    val ledger = new io.Ledger(outDir)
     val qname = f"neardedup_docs_${outDir.hashCode & 0x7fffffff}%08x"
-    val metrics = streaming.StreamMetrics.sinkWriter(
-      if (metricsDir.nonEmpty) metricsDir else outDir, qname)
-    val sinkNames = Pipeline.sinkNamesFor(rules)
+    val writeBatch = routedBatchWriter(outDir, qname, rules, metricsDir)
     streaming.NearDedup.verdicts(docStream, delayMs, nGram, bands, rowsPerBand)
       .writeStream
       .queryName(qname)
@@ -165,23 +172,7 @@ object Streaming {
       .trigger(trigger)
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[streaming.NearDedup.Verdict], batchId: Long) =>
-          val kept = streaming.NearDedup.finalize(batch.toDF)
-          val obs = org.apache.spark.sql.Observation()
-          val routed = Pipeline.observeSinkCounts(
-            Pipeline.transform(kept, rules = rules)
-              .select(col("url"), col("warc_ts"), col("lang"), col("source"),
-                col("host"), col("title"), col("status"), col("extracted_text"),
-                col("is_corrupt"), col("sink"), col("day")),
-            obs, sinkNames)
-          routed.write.mode("overwrite")
-            .partitionBy("sink")
-            .parquet(s"$outDir/routed_stream/batch=$batchId")
-          val counts = Pipeline.observedSinkCounts(obs, sinkNames).filter(_._2 > 0)
-          ledger.commit(s"batch-$batchId", counts.values.sum, counts)
-          counts.foreach { case (sink, n) =>
-            metrics.append(batchId, qname, "sink", sink, n)
-          }
-          ()
+          writeBatch(streaming.NearDedup.finalize(batch.toDF), batchId)
       }
       .start()
   }

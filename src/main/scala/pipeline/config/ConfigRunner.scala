@@ -133,27 +133,28 @@ object ConfigRunner {
         throw new IllegalArgumentException(s"no input bound for source '${s.id}'"))
       fromSource(s, raw)
     }
-    // ordered corpus transforms (our extension) run on the fanned-in doc
-    // frame BEFORE parse/route — compiled eagerly so a bad config fails
-    // here, not mid-job on an executor. UNDECODED rows (decode produced NO
-    // fields at all) bypass the filtering transforms via a per-row marker
-    // column — not a frame split, so each source is scanned once — because
-    // a lang/sample gate evaluating null must not silently delete a row
-    // the route stage guarantees to account ("a row matching NO rule must
-    // never vanish", stages.Route). Rows that decoded real fields are
-    // subject to the configured filters like any other row.
-    val fanned = Sources.fanIn(srcs)
-    val transformed =
-      if (spec.transforms.isEmpty) fanned
-      else {
-        val undecoded =
-          col("text").isNull && col("url").isNull && col("lang").isNull
-        TransformCompiler(spec)(
-          fanned.withColumn(TransformCompiler.BypassCol, undecoded))
-          .drop(TransformCompiler.BypassCol)
-      }
-    Pipeline.transform(transformed, observed = false, rules = rules(spec))
+    Pipeline.transform(applyTransforms(spec, Sources.fanIn(srcs)),
+      observed = false, rules = rules(spec))
   }
+
+  /** The ordered corpus transforms (our extension) over the fanned-in doc
+    * frame, BEFORE parse/route — compiled eagerly so a bad config fails
+    * here, not mid-job on an executor. UNDECODED rows (decode produced NO
+    * fields at all) bypass the filtering transforms via a per-row marker
+    * column — not a frame split, so each source is scanned once — because
+    * a lang/sample gate evaluating null must not silently delete a row
+    * the route stage guarantees to account ("a row matching NO rule must
+    * never vanish", stages.Route). Rows that decoded real fields are
+    * subject to the configured filters like any other row. */
+  private def applyTransforms(spec: PipelineSpec, docs: DataFrame): DataFrame =
+    if (spec.transforms.isEmpty) docs
+    else {
+      val undecoded =
+        col("text").isNull && col("url").isNull && col("lang").isNull
+      TransformCompiler(spec)(
+        docs.withColumn(TransformCompiler.BypassCol, undecoded))
+        .drop(TransformCompiler.BypassCol)
+    }
 
   /**
    * Deliver the routed frame according to each sink's kind. ONE partitioned
@@ -303,14 +304,7 @@ object ConfigRunner {
         raw.withColumn("warc_ts", col("warc_ts").cast("timestamp"))
       case _ => raw
     }
-    val docs =
-      if (spec.transforms.isEmpty) docs0
-      else {
-        val undecoded = col("text").isNull && col("url").isNull && col("lang").isNull
-        TransformCompiler(spec)(
-          docs0.withColumn(TransformCompiler.BypassCol, undecoded))
-          .drop(TransformCompiler.BypassCol)
-      }
+    val docs = applyTransforms(spec, docs0)
     val rs = rules(spec)
     val q = spec.streamDedupNear match {
       case Some(nd) if nd.mode == "image" =>

@@ -13,9 +13,15 @@ import org.apache.spark.unsafe.types.UTF8String
  * pays per-field expression overhead — profiled at ~500µs/row (substring-cap
  * + regex split + 4 regexp_extracts + from_json, several re-evaluated) vs
  * ~3µs/row here. One pass: indexOf-based line split (no regex), compiled-once
- * field regexes, one Jackson parse, zero intermediate arrays. Semantics are
- * pinned to pipeline.ref.RefNormalizer (the executable spec) and spec-tested
- * equal to the Column formulation.
+ * field regexes, one streaming Jackson parse, zero intermediate arrays.
+ * Semantics, `norm` included, are pinned to pipeline.ref.RefNormalizer (the
+ * executable spec; ParsePathParitySpec) and spec-tested equal to the Column
+ * formulation.
+ *
+ * Every row takes the same byte-level parse ([[ParseEventExpr.parseBytes]]).
+ * A text over the cap ([[ParseEventExpr.MaxChars]] UTF-16 code units, the
+ * reference's maxLineLenKB=200) is first cut exactly as
+ * RefNormalizer.truncate cuts it, then re-encoded as UTF-8.
  *
  * Returns a struct:
  *   host, title, status, bytes, method, extracted_text, is_corrupt, has_json,
@@ -25,8 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * (`examples/nginx_json.conf:15-48`); null unless a valid nginx record is
  * present.
  */
-case class ParseEventExpr(left: Expression, right: Expression,
-                          maxLineLenKB: Int = 200)
+case class ParseEventExpr(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = ParseEventExpr.schema
@@ -37,16 +42,7 @@ case class ParseEventExpr(left: Expression, right: Expression,
     * interpreted eval and the generated code. Public for codegen. */
   def compute(urlAny: Any, textAny: Any): InternalRow = {
     val url = if (urlAny == null) "" else urlAny.toString
-    textAny match {
-      case t: UTF8String if t.numBytes() <= maxLineLenKB * 1024 =>
-        // fast path: no truncation possible (bytes >= chars), parse the
-        // UTF-8 bytes directly — no full-text String decode
-        ParseEventExpr.parseBytes(url, t.getBytes)
-      case t: UTF8String =>
-        ParseEventExpr.parse(url, t.toString, maxLineLenKB)
-      case null =>
-        ParseEventExpr.parse(url, "", maxLineLenKB)
-    }
+    ParseEventExpr.parseBytes(url, ParseEventExpr.capped(textAny.asInstanceOf[UTF8String]))
   }
 
   override def eval(input: InternalRow): Any =
@@ -101,23 +97,39 @@ object ParseEventExpr {
     StructField("has_json", BooleanType, nullable = false),
     StructField("norm", normSchema)))
 
+  /** The reference's `maxLineLenKB: 200` cap
+    * (`examples/journald_to_s3batch_config.json:5`), in UTF-16 code units —
+    * the unit of RefNormalizer.truncate. */
+  val MaxChars: Int = 200 * 1024
+
+  /** The UTF-8 bytes [[parseBytes]] reads: a null text is empty; a text of
+    * at most MaxChars bytes cannot exceed MaxChars UTF-16 units and is
+    * passed as is; a longer one is decoded, cut to its first MaxChars UTF-16
+    * units and re-encoded. A cut inside a surrogate pair leaves a lone high
+    * surrogate, which the encoder writes as `?`; invalid UTF-8 decodes to
+    * U+FFFD. */
+  def capped(t: UTF8String): Array[Byte] =
+    if (t == null) Array.emptyByteArray
+    else if (t.numBytes() <= MaxChars) t.getBytes
+    else {
+      val s = t.toString
+      (if (s.length > MaxChars) s.substring(0, MaxChars) else s)
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    }
+
   private val StatusRe = java.util.regex.Pattern.compile("status=([0-9]+)")
   private val BytesRe = java.util.regex.Pattern.compile("bytes=([0-9]+)")
   private val MethodRe = java.util.regex.Pattern.compile("method=([A-Z]+)")
-
-  private val mapperLocal =
-    ThreadLocal.withInitial[com.fasterxml.jackson.databind.ObjectMapper](
-      () => new com.fasterxml.jackson.databind.ObjectMapper())
 
   private def u(s: String): UTF8String = UTF8String.fromString(s)
 
   private val TitlePrefix = "title: ".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
 
-  /** Byte-level fast path (no truncation needed): scans `\n` positions in
+  /** Byte-level parse of an already-capped text: scans `\n` positions in
     * the UTF-8 bytes (0x0A never occurs inside a multibyte sequence),
     * slices lines without decoding, regexes only the small kv line, and
-    * feeds Jackson the json-line byte range directly. Same semantics as
-    * [[parse]] — the line-split/field rules of RefNormalizer. */
+    * feeds Jackson the json-line byte range directly. The line-split/field
+    * rules of RefNormalizer.parse. */
   def parseBytes(url: String, b: Array[Byte]): InternalRow = {
     // up to 4 line ranges
     var e1 = -1; var e2 = -1; var e3 = -1; var e4 = -1
@@ -191,9 +203,9 @@ object ParseEventExpr {
    * Streaming-parser norm extraction (hot path): walks the record once with
    * Jackson's token stream — no tree allocation — pulling exactly the norm
    * fields. Returns null when the record is malformed or lacks `ts`
-   * (same accept/reject set as readTree + hasNonNull("ts"), since both
-   * require the full root object to tokenize cleanly). Duplicate keys:
-   * last occurrence wins, matching readTree.
+   * (the accept/reject set of RefNormalizer.nginxNorm, whose JSON tree also
+   * requires the full root object to tokenize cleanly). Duplicate keys:
+   * last occurrence wins, as in that tree.
    */
   private def streamNorm(b: Array[Byte], off: Int, len: Int): InternalRow = {
     import com.fasterxml.jackson.core.JsonToken
@@ -211,7 +223,7 @@ object ParseEventExpr {
         // 3=response 9=other). Set only on the 1→2 transition and left
         // untouched while inside nested depth≥3 objects, so fields appearing
         // after a nested sibling (e.g. {"response":{"hdr":{},"status":500}})
-        // still attribute to their section — matching readTree/buildNorm,
+        // still attribute to their section — matching the spec's tree reads,
         // which only ever look at direct depth-2 children. Scalar reads below
         // all guard on depth == 2, so a stale value at other depths is inert.
         var section2 = 0
@@ -223,9 +235,9 @@ object ParseEventExpr {
               val f = p.currentName()
               val v = p.nextToken()
               // Duplicate keys: LAST occurrence wins INCLUDING null values,
-              // matching readTree (a later binding replaces the earlier one
-              // wholesale) — so bindings assign/reset rather than skip.
-              // readTree re-binding corner cases, mirrored exactly:
+              // matching the spec's tree (a later binding replaces the earlier
+              // one wholesale) — so bindings assign/reset rather than skip.
+              // The tree's re-binding corner cases, mirrored exactly:
               //  - "ts" bound to an object/array: asText() == "" → accepted
               //    with a null timestamp (not corrupt);
               //  - a section key re-bound to a scalar/array/null: its fields
@@ -244,10 +256,10 @@ object ParseEventExpr {
                 case "response" => 3
                 case _ => 9
               }
-              // A TRACKED FIELD bound to a container coerces like readTree:
-              // asText(container) == "" and asInt/asLong(container) == 0 —
-              // so {"response":{"status":[500]}} reads status 0 on BOTH
-              // paths, not null-on-fast/0-on-slow.
+              // A TRACKED FIELD bound to a container coerces like the spec's
+              // tree: asText(container) == "" and asInt/asLong(container)
+              // == 0 — so {"response":{"status":[500]}} reads status 0, not
+              // null.
               def coerceContainerField(): Unit =
                 if (section2 == 1) {
                   if (f == "method") reqMethod = ""
@@ -286,7 +298,7 @@ object ParseEventExpr {
                 } else if (depth == 2 && section2 == 2) {
                   if (f == "response_length") rl = if (isNull) null else p.getText
                   // getValueAsLong applies Jackson's string->number coercion,
-                  // matching buildNorm's asLong on the slow path
+                  // matching the spec's asLong
                   else if (f == "bytes_sent")
                     upBytesSent = if (isNull) null else java.lang.Long.valueOf(p.getValueAsLong(0L))
                 } else if (depth == 2 && section2 == 3) {
@@ -304,8 +316,7 @@ object ParseEventExpr {
     } catch { case _: Exception => return null }
     if (ts == null) return null
     // numeric coercion must stay inside a guard: a non-long string here must
-    // mark the row corrupt (null), exactly like the slow path's try around
-    // buildNorm — not crash the job
+    // mark the row corrupt (null), exactly like the spec — not crash the job
     try {
       def coalesceNum(v: String): Long = if (v == null || v.isEmpty) 0L else v.toLong
       val micros = DateTimeUtils.stringToTimestamp(u(ts), java.time.ZoneOffset.UTC)
@@ -321,75 +332,7 @@ object ParseEventExpr {
     } catch { case _: NumberFormatException => null }
   }
 
-  private val jsonFactory = {
-    val f = new com.fasterxml.jackson.core.JsonFactory()
-    f
-  }
-
-  private def buildNorm(node: com.fasterxml.jackson.databind.JsonNode): InternalRow = {
-    val req = node.get("request")
-    val up = node.get("upstream")
-    val resp = node.get("response")
-    def s(n: com.fasterxml.jackson.databind.JsonNode, f: String): String =
-      if (n == null || !n.has(f) || n.get(f).isNull) null else n.get(f).asText()
-    def coalesceNum(v: String): Long = if (v == null || v.isEmpty) 0L else v.toLong
-    val micros = DateTimeUtils.stringToTimestamp(
-      u(node.get("ts").asText()), java.time.ZoneOffset.UTC).getOrElse(null)
-    InternalRow(
-      micros,
-      Option(s(req, "method")).map(u).orNull,
-      Option(s(req, "uri")).map(u).orNull,
-      if (resp != null && resp.hasNonNull("status")) Integer.valueOf(resp.get("status").asInt) else null,
-      java.lang.Long.valueOf(coalesceNum(s(resp, "body_bytes_sent"))),
-      java.lang.Long.valueOf(coalesceNum(s(up, "response_length"))),
-      if (up != null && up.hasNonNull("bytes_sent")) java.lang.Long.valueOf(up.get("bytes_sent").asLong) else null)
-  }
-
-  /** Mirrors RefNormalizer.parse exactly; see that spec for semantics. */
-  def parse(url: String, text0: String, maxLineLenKB: Int): InternalRow = {
-    val maxChars = maxLineLenKB * 1024
-    val text = if (text0.length > maxChars) text0.substring(0, maxChars) else text0
-
-    // line split by scanning (limit 4 segments: title/kv/body/json-rest)
-    val e1 = text.indexOf('\n')
-    val line0 = if (e1 < 0) text else text.substring(0, e1)
-    val e2 = if (e1 < 0) -1 else text.indexOf('\n', e1 + 1)
-    val line1 = if (e1 < 0) "" else if (e2 < 0) text.substring(e1 + 1) else text.substring(e1 + 1, e2)
-    val e3 = if (e2 < 0) -1 else text.indexOf('\n', e2 + 1)
-    val line2 = if (e2 < 0) "" else if (e3 < 0) text.substring(e2 + 1) else text.substring(e2 + 1, e3)
-    val e4 = if (e3 < 0) -1 else text.indexOf('\n', e3 + 1)
-    val line3 = if (e3 < 0) "" else if (e4 < 0) text.substring(e3 + 1) else text.substring(e3 + 1, e4)
-
-    val title = if (line0.startsWith("title: ")) line0.substring(7) else ""
-    val mS = StatusRe.matcher(line1)
-    val status = if (mS.find()) mS.group(1).toInt else 0
-    val mB = BytesRe.matcher(line1)
-    val bytes = if (mB.find()) mB.group(1).toLong else 0L
-    val mM = MethodRe.matcher(line1)
-    val method = if (mM.find()) mM.group(1) else ""
-
-    val hasJson = line3.startsWith("{")
-    var corrupt = false
-    var norm: InternalRow = null
-    if (hasJson) {
-      try {
-        val node = mapperLocal.get().readTree(line3)
-        if (node == null || !node.isObject || !node.hasNonNull("ts")) corrupt = true
-        else norm = buildNorm(node)
-      } catch { case _: Exception => corrupt = true }
-    }
-
-    InternalRow(
-      Option(hostOf(url)).map(u).orNull,
-      u(title),
-      status,
-      bytes,
-      u(method),
-      u(title + "\n" + line2),
-      corrupt,
-      hasJson,
-      norm)
-  }
+  private val jsonFactory = new com.fasterxml.jackson.core.JsonFactory()
 
   /** RefNormalizer.host — scheme://host/... slice. */
   def hostOf(url: String): String = {

@@ -416,7 +416,7 @@ object PortableExprs {
   def hyperplaneSig(vec: Column, planes: Int, dim: Int, planeOffset: Int = 0): Column =
     c(HyperplaneSigExpr(e(vec), planes, dim, planeOffset))
   def shingles(text: Column, nGram: Int): Column = c(ShinglesExpr(e(text), nGram))
-  def parseEvent(url: Column, text: Column, maxLineLenKB: Int = 200): Column =
-    c(ParseEventExpr(e(url), e(text), maxLineLenKB))
+  def parseEvent(url: Column, text: Column): Column =
+    c(ParseEventExpr(e(url), e(text)))
   def cosine(a: Column, b: Column): Column = c(CosineSimExpr(e(a), e(b)))
 }

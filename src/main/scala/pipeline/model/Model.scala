@@ -34,7 +34,19 @@ final case class ParsedEvent(
     bytes: Long,
     method: String,
     extracted_text: String,
-    is_corrupt: Boolean)
+    is_corrupt: Boolean,
+    norm: Option[NginxNorm])
+
+/** The normalized nginx record (the parse's `norm` struct); `None` and
+  * `null` stand for SQL NULL. `ts` is microseconds since the epoch. */
+final case class NginxNorm(
+    ts: Option[Long],
+    req_method: String,
+    uri: String,
+    resp_status: Option[Int],
+    body_bytes_sent: Long,
+    response_length: Long,
+    up_bytes_sent: Option[Long])
 
 object Schemas {
 

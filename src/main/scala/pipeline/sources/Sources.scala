@@ -46,8 +46,10 @@ object Sources {
         .otherwise(col(payloadCol)))
 
   /** S2 `journald`-style guard: cap payload size (`maxLineLenKB`,
-    * reference `examples/journald_to_s3batch_config.json:5`);
-    * char-based cap, matching RefNormalizer.truncate. */
+    * reference `examples/journald_to_s3batch_config.json:5`). Spark
+    * `substring` counts code points, so an astral character counts once
+    * here but twice (two UTF-16 code units) in RefNormalizer.truncate and
+    * pipeline.expr.ParseEventExpr. */
   def truncate(df: DataFrame, maxLineLenKB: Int, payloadCol: String = "payload"): DataFrame =
     df.withColumn(payloadCol, substring(col(payloadCol), 1, maxLineLenKB * 1024))
 

@@ -18,8 +18,6 @@ import pipeline.model.{Schemas, Sinks}
  */
 object Parse {
 
-  val MaxLineLenKB = 200
-
   /**
    * T1/T2: truncation guard + grok-style extraction + nginx JSON parse
    * (reference `examples/journald_to_s3batch_config.json:5`,
@@ -30,14 +28,16 @@ object Parse {
    * numerics), extracted_text, is_corrupt, day.
    * Never touches `html` — column pruning keeps the binary out of the scan.
    *
-   * Fast path: ONE native expression (pipeline.expr.ParseEventExpr) does
-   * the whole per-event parse in a single pass (~3µs/row vs ~500µs/row for
-   * the Column formulation, profiled at 2M rows). [[columns]] keeps the
-   * built-ins-only formulation as the cross-checked reference.
+   * ONE native expression (pipeline.expr.ParseEventExpr) does the whole
+   * per-event parse in a single pass (~3µs/row vs ~500µs/row for the Column
+   * formulation, profiled at 2M rows), truncation included: the cap is the
+   * reference's 200 KB, counted in UTF-16 code units like
+   * RefNormalizer.truncate ([[pipeline.expr.ParseEventExpr.MaxChars]]).
+   * [[columns]] keeps the built-ins-only formulation as the cross-checked
+   * reference.
    */
-  def apply(df: DataFrame, maxLineLenKB: Int = MaxLineLenKB): DataFrame = {
-    val p = pipeline.expr.PortableExprs.parseEvent(
-      col("url"), col("text"), maxLineLenKB)
+  def apply(df: DataFrame): DataFrame = {
+    val p = pipeline.expr.PortableExprs.parseEvent(col("url"), col("text"))
     df.withColumn("p", p)
       .withColumn("host", col("p.host"))
       .withColumn("title", col("p.title"))
@@ -53,10 +53,11 @@ object Parse {
 
   /** Column/built-ins-only formulation of [[apply]] (plus the full `nginx`
     * struct) — the Spark-idiomatic reference implementation, spec-tested
-    * equal to the fast path. */
-  def columns(df: DataFrame, maxLineLenKB: Int = MaxLineLenKB): DataFrame = {
-    val maxChars = maxLineLenKB * 1024
-    val lines = split(substring(col("text"), 1, maxChars), "\n")
+    * equal to the fast path. It agrees with the spec only below the cap:
+    * Spark `substring` counts code points, the spec UTF-16 code units. */
+  def columns(df: DataFrame): DataFrame = {
+    val lines = split(
+      substring(col("text"), 1, pipeline.expr.ParseEventExpr.MaxChars), "\n")
     val kv = coalesce(get(lines, lit(1)), lit(""))
     val jsonLineRaw = get(lines, lit(3))
     val jsonLine = when(jsonLineRaw.startsWith("{"), jsonLineRaw)

@@ -1,15 +1,22 @@
 package pipeline
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import pipeline.expr.ParseEventExpr
+import pipeline.model.{NginxNorm, WebDoc}
+import pipeline.ref.RefNormalizer
 
-/** The fast path (parseBytes → streamNorm, token-stream Jackson) and the slow
-  * path (parse → readTree/buildNorm, used above the maxLineLenKB cutoff) must
-  * normalize every record IDENTICALLY — otherwise the same event changes
-  * meaning at the 200KB boundary. These fixtures are adversarial JSON shapes:
-  * nested sibling objects inside sections, duplicate keys with null
+/** The production parse (ParseEventExpr.compute: cap, then the byte-level
+  * parse with its token-stream `norm`) must normalize every record exactly
+  * as the spec (RefNormalizer.parse, a Jackson tree) does, on both sides of
+  * the 200 KB cap — otherwise the same event changes meaning at the
+  * boundary. These fixtures are adversarial JSON shapes: nested sibling
+  * objects inside sections, duplicate keys with null
   * (last-occurrence-wins), section keys re-bound to scalars/arrays/objects,
   * `ts` bound to non-scalars, numeric coercion edge cases.
   */
@@ -78,36 +85,103 @@ class ParsePathParitySpec extends AnyFunSuite {
       s"title: t\nkv\nbody\n not-json-line"
     )
 
-  /** Schema-aware canonical form of the parse result struct. */
-  private def canon(r: InternalRow): Seq[Any] = {
-    def normOf(n: InternalRow): Seq[Any] =
-      if (n == null) null
-      else Seq(
-        if (n.isNullAt(0)) null else n.getLong(0),
-        if (n.isNullAt(1)) null else n.getUTF8String(1).toString,
-        if (n.isNullAt(2)) null else n.getUTF8String(2).toString,
-        if (n.isNullAt(3)) null else n.getInt(3),
-        if (n.isNullAt(4)) null else n.getLong(4),
-        if (n.isNullAt(5)) null else n.getLong(5),
-        if (n.isNullAt(6)) null else n.getLong(6))
-    Seq(
-      if (r.isNullAt(0)) null else r.getUTF8String(0).toString,
-      if (r.isNullAt(1)) null else r.getUTF8String(1).toString,
-      r.getInt(2), r.getLong(3),
-      if (r.isNullAt(4)) null else r.getUTF8String(4).toString,
-      if (r.isNullAt(5)) null else r.getUTF8String(5).toString,
-      r.getBoolean(6), r.getBoolean(7),
-      normOf(if (r.isNullAt(8)) null else r.getStruct(8, 7)))
+  private val url = "https://parity.example.com/p"
+  private val cap = ParseEventExpr.MaxChars
+  private val expr = ParseEventExpr(Literal(url), Literal(""))
+
+  /** The parse result in the spec's shape: (host, title, status, bytes,
+    * method, extracted_text, is_corrupt, has_json, norm). */
+  private def fields(r: InternalRow): Seq[Any] = {
+    def str(i: Int) = if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+    val norm = if (r.isNullAt(8)) None else {
+      val n = r.getStruct(8, 7)
+      def opt[T](i: Int, get: Int => T) = if (n.isNullAt(i)) None else Some(get(i))
+      Some(NginxNorm(
+        ts = opt(0, n.getLong),
+        req_method = opt(1, n.getUTF8String).map(_.toString).orNull,
+        uri = opt(2, n.getUTF8String).map(_.toString).orNull,
+        resp_status = opt(3, n.getInt),
+        body_bytes_sent = n.getLong(4),
+        response_length = n.getLong(5),
+        up_bytes_sent = opt(6, n.getLong)))
+    }
+    Seq(str(0), str(1), r.getInt(2), r.getLong(3), str(4), str(5),
+      r.getBoolean(6), r.getBoolean(7), norm)
   }
 
-  test("fast byte path ≡ slow readTree path on adversarial records") {
-    val url = "https://parity.example.com/p"
+  private def computed(text: String): Seq[Any] =
+    fields(expr.compute(UTF8String.fromString(url),
+      if (text == null) null else UTF8String.fromString(text)))
+
+  /** The spec's fields, strings in their UTF-8 form (the column's form: a
+    * lone surrogate left by the cap encodes as `?`). has_json is not a
+    * spec field: a json line is either corrupt or has a norm. */
+  private def spec(text: String): Seq[Any] = {
+    val e = RefNormalizer.parse(
+      WebDoc(url, new java.sql.Timestamp(0L), null, text, "en"))
+    def utf8(s: String) = if (s == null) null else new String(s.getBytes(UTF_8), UTF_8)
+    Seq(utf8(e.host), utf8(e.title), e.status, e.bytes, utf8(e.method),
+      utf8(e.extracted_text), e.is_corrupt, e.is_corrupt || e.norm.isDefined,
+      e.norm.map(n => n.copy(req_method = utf8(n.req_method), uri = utf8(n.uri))))
+  }
+
+  private def assertSpec(text: String, what: String): Seq[Any] = {
+    val got = computed(text)
+    assert(got == spec(text), s"$what: compute differs from RefNormalizer")
+    got
+  }
+
+  /** `text` with its lines 0–3 kept and a fifth line that takes the text
+    * past the cap. */
+  private def padded(text: String): String = {
+    val lines = text.split("\n", -1).length
+    text + "\n" * (5 - lines).max(1) + "x" * cap
+  }
+
+  test("compute ≡ RefNormalizer on adversarial records, plain and padded") {
     texts.foreach { tx =>
-      val fast = canon(ParseEventExpr.parseBytes(url,
-        tx.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-      val slow = canon(ParseEventExpr.parse(url, tx, 200))
-      assert(fast == slow, s"path divergence for text: [$tx]")
+      val plain = assertSpec(tx, s"[$tx]")
+      val long = padded(tx)
+      assert(long.getBytes(UTF_8).length > cap)
+      assert(assertSpec(long, s"padded [$tx]") == plain,
+        s"the cut reached lines 0-3 of [$tx]")
     }
+    // the cases do exercise norm: accepted, rejected and coerced records
+    val norms = texts.map(t => computed(t)(8))
+    assert(norms.count(_ != None) >= 15 && texts.count(t => computed(t)(6) == true) >= 3)
+  }
+
+  test("the cap counts UTF-16 code units at its boundaries") {
+    val head = "title: t\nk\n"
+    def body(r: Seq[Any]) = r(5).asInstanceOf[String].stripPrefix("t\n")
+    // exactly at the cap: nothing cut; one unit over: the last one goes
+    val exact = head + "b" * (cap - head.length - 1) + "Z"
+    assert(exact.length == cap && body(assertSpec(exact, "exact")).endsWith("Z"))
+    val over = exact + "Y"
+    assert(body(assertSpec(over, "cap+1")).endsWith("Z"))
+    // multibyte: over the cap in bytes, under it in units → kept whole
+    val wide = "title: 東京\nk\n" + "é" * (cap - 100)
+    assert(wide.getBytes(UTF_8).length > cap && wide.length < cap)
+    assert(assertSpec(wide, "multibyte")(5) == "東京\n" + "é" * (cap - 100))
+    // an emoji whose high surrogate is unit 204,800: the cut leaves it
+    // alone, and it encodes as `?` — in the title and in the body line
+    val emoji = "\uD83D\uDE00"
+    val inTitle = "title: " + "a" * (cap - 8) + emoji + "\nk\nbody"
+    assert(inTitle.charAt(cap - 1) == '\uD83D')
+    assert(assertSpec(inTitle, "emoji in title")(1) == "a" * (cap - 8) + "?")
+    val inBody = head + "a" * (cap - head.length - 1) + emoji + "tail"
+    assert(inBody.charAt(cap - 1) == '\uD83D')
+    assert(body(assertSpec(inBody, "emoji in body")) == "a" * (cap - head.length - 1) + "?")
+    // the cap inside the json line: the record is cut open → corrupt
+    val json = s"title: t\nk\nb\n{$goodTs,\"pad\":\"" + "p" * cap + "\"}"
+    val cut = assertSpec(json, "cap in json")
+    assert(cut(6) == true && cut(7) == true && cut(8) == None)
+    // the cap inside trailing garbage after a closed root: still a record
+    val garbage = s"title: t\nk\nb\n{$goodTs} " + "g" * cap
+    val kept = assertSpec(garbage, "cap in trailing garbage")
+    assert(kept(6) == false && kept(8) != None)
+    // a null text parses as the empty text
+    assert(computed(null) == spec(null) && computed(null) == computed(""))
   }
 
   test("fast path norm matches on the regression shapes explicitly") {

@@ -62,8 +62,9 @@ class PipelineSpec extends AnyFunSuite {
     val s = sc
     import s.implicits._
     val big = "title: big doc\nstatus=200 bytes=1 method=GET\n" + ("x" * 300000)
-    // >200KB WITH a json line before the padding: exercises the slow
-    // (String) parse path including its nginx/norm branch
+    // >200KB WITH a json line before the padding: exercises the over-cap
+    // branch (cut to 204,800 UTF-16 units, re-encoded, then the same byte
+    // parse) including its nginx/norm branch
     val bigJson = "title: j\nstatus=504 bytes=2 method=GET\nbody words\n" +
       pipeline.fixtures.Webtext.nginxJson(7L) + "\n" + ("y" * 300000)
     val bigCorrupt = "title: c\nstatus=200 bytes=3 method=GET\nbody\n" +

@@ -52,9 +52,13 @@ class SourcesMetricsSpec extends AnyFunSuite {
   test("truncate guard caps payloads at maxLineLenKB chars") {
     val s = sc
     import s.implicits._
-    val df = Seq("a" * 300000, "short").toDF("payload")
+    // an astral character is one code point (Spark substring's unit) but
+    // two UTF-16 code units (String.length)
+    val emoji = "\uD83D\uDE00"
+    val df = Seq("a" * 300000, "short", emoji * 300000).toDF("payload")
     val out = Sources.truncate(df, 200).as[String].collect()
     assert(out(0).length == 200 * 1024 && out(1) == "short")
+    assert(out(2) == emoji * (200 * 1024) && out(2).length == 2 * 200 * 1024)
   }
 
   test("source-side filter pushes to the scan (eventlog XPath analog)") {
