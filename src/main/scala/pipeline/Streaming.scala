@@ -14,7 +14,7 @@ import pipeline.stages.Aggregate
  * so batch and streaming cannot drift.
  *
  * Restart semantics: `checkpointLocation` stores source offsets + batch
- * ids; rerunning `start` after a kill resumes exactly where the stream
+ * ids; restarting a daemon after a kill resumes exactly where the stream
  * stopped (the Spark-native form of the reference's `Restart=always`
  * + at-least-once redelivery, `examples/reveald.service:10`). foreachBatch
  * writes are idempotent per (batchId, sink, day) path, so redelivered
@@ -31,17 +31,6 @@ object Streaming {
       .parquet(landingDir)
 
   /**
-   * Start the routed-write stream. Each micro-batch runs the same
-   * parse→enrich→route chain and lands partitioned files under
-   * `outDir/routed_stream`; per-batch counts append to the ledger
-   * (unit = "batch-<id>") — the streaming analog of the count/time
-   * batcher flush (`examples/journald_to_s3batch_config.json:11-12`).
-   */
-  def start(spark: SparkSession, landingDir: String, outDir: String,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    startDocs(readWebtext(spark, landingDir), outDir, trigger)
-
-  /**
    * Streaming EXACT dedup: drop repeated payloads (same text digest)
    * arriving within the watermark delay — the streaming twin of
    * pipeline.ops.Dedup.exact / dropExactDuplicates, with the same null
@@ -53,7 +42,7 @@ object Streaming {
    * text survives — e.g. decodeJournald's try_to_timestamp) also pass
    * through: a null event time inside an event-time stateful operator is
    * silently treated as infinitely late once the watermark moves — the
-   * same guard Batcher.flushes applies before ITS stateful op.
+   * same guard Batcher.eventFlushes applies before ITS stateful op.
    *
    * NEAR-duplicates: see pipeline.streaming.NearDedup — the approximate
    * single-pass twin of the batch `dedup_near` chain (band-owner state +
@@ -76,6 +65,45 @@ object Streaming {
       .drop("digest")
   }
 
+  /** The shell every doc daemon ([[startDocs]], [[startDocsNearDedup]],
+    * [[startImagesNearDedup]]) runs in: query `<prefix>_%08x` of
+    * `outDir.hashCode`, checkpoint `outDir/_checkpoint`, AvailableNow, and
+    * per micro-batch `writeBatch`'s per-sink counts committed to the ledger
+    * (unit "batch-<id>") and appended as `sink` rows to the metrics table.
+    *
+    * The query name lets the metrics table's `query` column correlate the
+    * listener's input/late rows (keyed by progress.name) with the
+    * foreachBatch sink rows. Derived from outDir so it is (a) STABLE across
+    * restarts — a re-executed micro-batch after a crash must hit the same
+    * idempotence key in StreamMetrics, which a random name would defeat —
+    * and (b) distinct for concurrent streams (distinct outDirs — they
+    * cannot legally share one: same checkpointLocation). The metrics TABLE
+    * may be shared across a daemon's queries via `metricsDir` (default:
+    * this query's outDir): the sinkWriter role fence keys every row by this
+    * query, so N queries writing one table stay disjoint. */
+  private def startDaemon(stream: DataFrame, outDir: String, prefix: String,
+                          metricsDir: String = "")(
+      writeBatch: (DataFrame, Long) => Map[String, Long]): StreamingQuery = {
+    val qname = f"${prefix}_${outDir.hashCode & 0x7fffffff}%08x"
+    val ledger = new io.Ledger(outDir)
+    val metrics = streaming.StreamMetrics.sinkWriter(
+      if (metricsDir.nonEmpty) metricsDir else outDir, qname)
+    stream.writeStream
+      .queryName(qname)
+      .option("checkpointLocation", s"$outDir/_checkpoint")
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val counts = writeBatch(batch, batchId)
+        ledger.commit(s"batch-$batchId", counts.values.sum, counts)
+        // `input`/`late` rows come from the progress listener
+        // (streaming.StreamMetrics.attach)
+        counts.foreach { case (sink, n) =>
+          metrics.append(batchId, qname, "sink", sink, n)
+        }
+      }
+      .start()
+  }
+
   /** The shared routed-write stream over ANY doc-shaped stream (file tap,
     * bus tap, socket dev source): per micro-batch, the batch stage chain +
     * a partitioned write + a ledger commit. Per-sink counts come from
@@ -83,45 +111,23 @@ object Streaming {
     * (rules + deadletter), so they are plain conditional aggregates; the
     * old persist + separate sinkCounts action doubled the per-batch work. */
   def startDocs(docStream: DataFrame, outDir: String,
-                trigger: Trigger = Trigger.AvailableNow(),
                 rules: Seq[stages.RouteRule] = stages.Route.defaultRules,
-                metricsDir: String = ""): StreamingQuery = {
-    // query name: the metrics table's `query` column must correlate the
-    // listener's input/late rows (keyed by progress.name) with the
-    // foreachBatch sink rows. Derived from outDir so it is (a) STABLE
-    // across restarts — a re-executed micro-batch after a crash must hit
-    // the same idempotence key in StreamMetrics, which a random name would
-    // defeat — and (b) distinct for concurrent streams (distinct outDirs —
-    // they cannot legally share one: same checkpointLocation). The metrics
-    // TABLE may be shared across a daemon's queries via `metricsDir`
-    // (default: this query's outDir): the sinkWriter role fence keys every
-    // row by this query, so N queries writing one table stay disjoint.
-    val qname = f"routed_docs_${outDir.hashCode & 0x7fffffff}%08x"
-    val writeBatch = routedBatchWriter(outDir, qname, rules, metricsDir)
-    docStream
-      // streaming metrics surface: the same observe() counters as the batch
-      // path, reported per micro-batch in StreamingQueryProgress
-      .observe("graft_stream_in",
-        count(lit(1)).as("events_in"),
-        max(octet_length(col("text"))).as("max_event_bytes"))
-      .writeStream
-      .queryName(qname)
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch(writeBatch)
-      .start()
-  }
+                metricsDir: String = ""): StreamingQuery =
+    startDaemon(
+      docStream
+        // streaming metrics surface: the same observe() counters as the
+        // batch path, reported per micro-batch in StreamingQueryProgress
+        .observe("graft_stream_in",
+          count(lit(1)).as("events_in"),
+          max(octet_length(col("text"))).as("max_event_bytes")),
+      outDir, "routed_docs", metricsDir)(routedBatchWriter(outDir, rules))
 
   /** The micro-batch body of every routed-docs daemon ([[startDocs]],
-    * [[startDocsNearDedup]]): the batch stage chain, a partitioned write
-    * under `routed_stream/batch=<id>`, a ledger commit (unit
-    * "batch-<id>") and per-sink rows into the metrics table. */
-  private def routedBatchWriter(outDir: String, qname: String,
-                                rules: Seq[stages.RouteRule],
-                                metricsDir: String): (DataFrame, Long) => Unit = {
-    val ledger = new io.Ledger(outDir)
-    val metrics = streaming.StreamMetrics.sinkWriter(
-      if (metricsDir.nonEmpty) metricsDir else outDir, qname)
+    * [[startDocsNearDedup]]): the batch stage chain and a partitioned
+    * write under `routed_stream/batch=<id>`; returns the non-zero per-sink
+    * counts. */
+  private def routedBatchWriter(outDir: String, rules: Seq[stages.RouteRule])
+      : (DataFrame, Long) => Map[String, Long] = {
     val sinkNames = Pipeline.sinkNamesFor(rules)
     (batch, batchId) => {
       val obs = org.apache.spark.sql.Observation()
@@ -134,15 +140,7 @@ object Streaming {
       routed.write.mode("overwrite")
         .partitionBy("sink")
         .parquet(s"$outDir/routed_stream/batch=$batchId")
-      val counts = Pipeline.observedSinkCounts(obs, sinkNames).filter(_._2 > 0)
-      ledger.commit(s"batch-$batchId", counts.values.sum, counts)
-      // per-sink rows into the queryable metrics table — the same
-      // numbers the ledger just committed (reconciliation is asserted
-      // in StreamingSpec); `input`/`late` rows come from the progress
-      // listener (streaming.StreamMetrics.attach)
-      counts.foreach { case (sink, n) =>
-        metrics.append(batchId, qname, "sink", sink, n)
-      }
+      Pipeline.observedSinkCounts(obs, sinkNames).filter(_._2 > 0)
     }
   }
 
@@ -160,21 +158,14 @@ object Streaming {
   def startDocsNearDedup(docStream: DataFrame, outDir: String,
                          delayMs: Long = 3600000L, nGram: Int = 3,
                          bands: Int = 4, rowsPerBand: Int = 4,
-                         trigger: Trigger = Trigger.AvailableNow(),
-                         rules: Seq[stages.RouteRule] = stages.Route.defaultRules,
-                         metricsDir: String = ""): StreamingQuery = {
-    val qname = f"neardedup_docs_${outDir.hashCode & 0x7fffffff}%08x"
-    val writeBatch = routedBatchWriter(outDir, qname, rules, metricsDir)
-    streaming.NearDedup.verdicts(docStream, delayMs, nGram, bands, rowsPerBand)
-      .writeStream
-      .queryName(qname)
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[streaming.NearDedup.Verdict], batchId: Long) =>
-          writeBatch(streaming.NearDedup.finalize(batch.toDF), batchId)
-      }
-      .start()
+                         rules: Seq[stages.RouteRule] = stages.Route.defaultRules)
+      : StreamingQuery = {
+    val writeBatch = routedBatchWriter(outDir, rules)
+    startDaemon(
+      streaming.NearDedup.verdicts(docStream, delayMs, nGram, bands, rowsPerBand).toDF,
+      outDir, "neardedup_docs") { (batch, batchId) =>
+      writeBatch(streaming.NearDedup.finalize(batch), batchId)
+    }
   }
 
   /**
@@ -189,34 +180,19 @@ object Streaming {
    */
   def startImagesNearDedup(docStream: DataFrame, outDir: String,
                            delayMs: Long = 3600000L, bands: Int = 8,
-                           maxHamming: Int = 3,
-                           trigger: Trigger = Trigger.AvailableNow(),
-                           metricsDir: String = ""): StreamingQuery = {
-    val ledger = new io.Ledger(outDir)
-    val qname = f"neardedup_images_${outDir.hashCode & 0x7fffffff}%08x"
-    val metrics = streaming.StreamMetrics.sinkWriter(
-      if (metricsDir.nonEmpty) metricsDir else outDir, qname)
-    streaming.NearDedup.imageVerdicts(docStream, delayMs, bands, maxHamming)
-      .writeStream
-      .queryName(qname)
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[streaming.NearDedup.ImgVerdict], batchId: Long) =>
-          val kept = streaming.NearDedup.finalizeImage(batch.toDF)
-            .withColumn("day", to_date(col("warc_ts")))
-          val obs = org.apache.spark.sql.Observation()
-          val out = kept.observe(obs, count(lit(1)).as("rows"))
-          out.write.mode("overwrite")
-            .partitionBy("day")
-            .parquet(s"$outDir/kept_stream/batch=$batchId")
-          val n = obs.get("rows").asInstanceOf[Long]
-          ledger.commit(s"batch-$batchId", n, Map("kept" -> n))
-          metrics.append(batchId, qname, "sink", "kept", n)
-          ()
-      }
-      .start()
-  }
+                           maxHamming: Int = 3): StreamingQuery =
+    startDaemon(
+      streaming.NearDedup.imageVerdicts(docStream, delayMs, bands, maxHamming).toDF,
+      outDir, "neardedup_images") { (batch, batchId) =>
+      val kept = streaming.NearDedup.finalizeImage(batch)
+        .withColumn("day", to_date(col("warc_ts")))
+      val obs = org.apache.spark.sql.Observation()
+      kept.observe(obs, count(lit(1)).as("rows"))
+        .write.mode("overwrite")
+        .partitionBy("day")
+        .parquet(s"$outDir/kept_stream/batch=$batchId")
+      Map("kept" -> obs.get("rows").asInstanceOf[Long])
+    }
 
   /**
    * Streaming PUSH delivery with the reference's exact count/time batch
@@ -231,21 +207,19 @@ object Streaming {
    */
   def startPushFlushes(routedStream: DataFrame, outDir: String,
                        batchSize: Int, flushMs: Long,
-                       transport: io.Push.Transport, maxRetries: Int = 3,
-                       trigger: Trigger = Trigger.AvailableNow(),
-                       shards: Int = 1,
+                       transport: io.Push.Transport, shards: Int = 1,
                        watermarkDelay: String = "0 seconds"): StreamingQuery = {
     val flushes = streaming.Batcher.eventFlushes(
       routedStream, batchSize, flushMs, shards, watermarkDelay)
     flushes.writeStream
       .option("checkpointLocation", s"$outDir/_push_checkpoint")
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch {
         (b: org.apache.spark.sql.Dataset[streaming.Batcher.EventFlush], _: Long) =>
           b.foreachPartition {
             (it: Iterator[streaming.Batcher.EventFlush]) =>
               it.foreach(f => io.Push.sendWithRetry(
-                transport, f.sink, f.batchId, f.payload, maxRetries,
+                transport, f.sink, f.batchId, f.payload, io.Push.MaxRetries,
                 deadletterDir = s"$outDir/deadletter"))
           }
           ()
@@ -272,11 +246,10 @@ object Streaming {
   /** Bus tap → doc decode (topic subscription + metadata columns, the
     * config id as provenance) → the shared routed-write stream. */
   def startBus(spark: SparkSession, landingDir: String, outDir: String,
-               topic: Option[String], sourceId: String = "mqtt",
-               trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+               topic: Option[String], sourceId: String = "mqtt"): StreamingQuery = {
     val docs = pipeline.sources.Bus.decodeDocs(readBus(spark, landingDir), topic)
       .withColumn("source", lit(sourceId))
-    startDocs(docs, outDir, trigger)
+    startDocs(docs, outDir)
   }
 
   /**

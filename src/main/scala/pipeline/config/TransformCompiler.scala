@@ -63,6 +63,17 @@ object TransformCompiler {
   private def bypass(df: DataFrame): Column =
     if (df.columns.contains(BypassCol)) col(BypassCol) else lit(false)
 
+  /** `df` + `_nid`, the row id the id-keyed corpus transforms (dedup_near,
+    * decontaminate, dup_span_*) join on: 128-bit `Dedup.nid128` for rows
+    * that participate (not bypass-marked, non-null text), NULL otherwise —
+    * a null join key matches nothing, so a non-participating row can never
+    * be dropped (the never-vanish guarantee). Identical rows share one id. */
+  private def withNid(df: DataFrame): DataFrame =
+    df.withColumn("_nid",
+      when(!bypass(df) && col("text").isNotNull,
+        pipeline.ops.Dedup.nid128(col("url"), col("warc_ts").cast("string"),
+          col("source"), col("text"))))
+
   def apply(spec: PipelineSpec): DataFrame => DataFrame =
     spec.transforms.map(one).foldLeft(identity[DataFrame] _)(_ andThen _)
 
@@ -238,10 +249,7 @@ object TransformCompiler {
           // minhashLsh) never enter the pair graph; their _nid is NULL so
           // the left-anti can never alias them onto a dropped id (null
           // join keys match nothing → kept) — the never-vanish guarantee
-          val participates = !bypass(df) && col("text").isNotNull
-          val withId = df.withColumn("_nid",
-            when(participates, pipeline.ops.Dedup.nid128(col("url"),
-              col("warc_ts").cast("string"), col("source"), col("text"))))
+          val withId = withNid(df)
           val sigSrc = withId.filter(col("_nid").isNotNull)
           // NOTE eager: connectedComponents iterates with driver-side
           // convergence checks, so this transform RUNS Spark jobs at
@@ -285,12 +293,9 @@ object TransformCompiler {
           if (!bench.columns.contains(benchCol))
             err(s"benchmark table has no column '$benchCol' " +
               s"(columns: ${bench.columns.mkString(", ")})")
-          val participates = !bypass(df) && col("text").isNotNull
           // 128-bit id for the same reason as dedup_near: a 64-bit
           // conflation here would drop an unrelated doc as "contaminated"
-          val withId = df.withColumn("_nid",
-            when(participates, pipeline.ops.Dedup.nid128(col("url"),
-              col("warc_ts").cast("string"), col("source"), col("text"))))
+          val withId = withNid(df)
           val contaminated = pipeline.ops.CorpusRefine.decontaminate(
             withId.filter(col("_nid").isNotNull),
             bench.select(col(benchCol).as("text")),
@@ -313,10 +318,7 @@ object TransformCompiler {
         if (maxFrac < 0.0 || maxFrac > 1.0)
           err(s"maxFrac must be in [0,1], got $maxFrac")
         df => {
-          val participates = !bypass(df) && col("text").isNotNull
-          val withId = df.withColumn("_nid",
-            when(participates, pipeline.ops.Dedup.nid128(col("url"),
-              col("warc_ts").cast("string"), col("source"), col("text"))))
+          val withId = withNid(df)
           val bad = pipeline.ops.Dedup.duplicateSpanStats(
             withId.filter(col("_nid").isNotNull), "_nid", "text", fK)
             .filter(col("dup_frac") > maxFrac)
@@ -337,10 +339,7 @@ object TransformCompiler {
         val aK = intOpt("k").getOrElse(8)
         if (aK <= 0) err(s"k must be positive, got $aK")
         df => {
-          val participates = !bypass(df) && col("text").isNotNull
-          val withId = df.withColumn("_nid",
-            when(participates, pipeline.ops.Dedup.nid128(col("url"),
-              col("warc_ts").cast("string"), col("source"), col("text"))))
+          val withId = withNid(df)
           val rewritten = pipeline.ops.Dedup.duplicateSpanApply(
             withId.filter(col("_nid").isNotNull), "_nid", "text", aK)
             .drop("n_removed_tokens").drop("_nid")

@@ -269,9 +269,8 @@ object Bpe {
     BpeTable.intern(new BpeTable(learn(TrainingCorpus, 8192, byteLevel = true),
       byteLevel = true))
 
-  /** Fixture merge list / rank lookup (back-compat aliases). */
+  /** Fixture merge list (back-compat alias). */
   def Merges: Vector[(String, String)] = Fixture.merges
-  def Ranks: java.util.HashMap[String, Integer] = Fixture.ranks
 
   /** Total fixture-table BPE token count for a text (driver-side twin of
     * the expression; specs compare against it). */

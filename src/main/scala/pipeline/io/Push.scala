@@ -72,6 +72,9 @@ object Push {
 
   final case class Delivery(delivered: Long, deadlettered: Long, batches: Long)
 
+  /** Retries per batch before it diverts to the deadletter directory. */
+  val MaxRetries = 3
+
   /** Send ONE batch with capped-backoff retry; on final failure divert the
     * whole batch to the deadletter directory (at-least-once, never silent
     * loss). Executor-side. Returns true iff delivered. Shared by the batch
@@ -107,7 +110,7 @@ object Push {
    */
   def deliver(df: DataFrame, sinkId: String, batchSize: Int,
               transport: Transport, deadletterDir: String,
-              maxRetries: Int = 3): Delivery = {
+              maxRetries: Int = MaxRetries): Delivery = {
     require(batchSize > 0, "batchSize must be positive")
     val spark = df.sparkSession
     val delivered = spark.sparkContext.longAccumulator(s"push_${sinkId}_delivered")

@@ -173,12 +173,4 @@ object Multimodal {
   def mp4Asset(id: Long, timescale: Int, durationTicks: Long,
                w: Int, h: Int): MediaAsset =
     MediaAsset(id, "video", Mp4EncodeExpr.encode(timescale, durationTicks, w, h))
-
-  /** Column-only binary feature extraction (no codec needed): sizes and a
-    * magic-byte sniff — fully portable to the SQL oracle. */
-  def binaryFeatures(df: DataFrame, bytesCol: String): DataFrame =
-    df.withColumn("n_bytes", octet_length(col(bytesCol)).cast("long"))
-      .withColumn("magic_hex", hex(substring(col(bytesCol), 1, 4)))
-      .withColumn("looks_html",
-        substring(col(bytesCol), 1, 6).cast("string").startsWith("<html>"))
 }

@@ -13,13 +13,6 @@ import pipeline.model.Schemas
  */
 object Sources {
 
-  /** S1 `file`: one event per line under a directory (reference
-    * `examples/config.json:8-12`). Provenance column = source id. */
-  def fileLines(spark: SparkSession, path: String, sourceId: String): DataFrame =
-    spark.read.text(path)
-      .withColumnRenamed("value", "payload")
-      .withColumn("source", lit(sourceId))
-
   /** S1 batch form over the webtext table (the 10^12-row analog). */
   def webtext(spark: SparkSession, path: String, sourceId: String): DataFrame =
     spark.read.schema(Schemas.webtext).parquet(path)

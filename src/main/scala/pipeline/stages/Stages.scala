@@ -166,14 +166,6 @@ object Aggregate {
     * so counts key on provenance too. */
   def sourceSinkCounts(routed: DataFrame): DataFrame =
     routed.groupBy("source", "sink").agg(count(lit(1)).as("n_rows"))
-
-  /** Per-source×sink×day rollup for the metrics surface (SURVEY.md §2.4 A2). */
-  def accounting(routed: DataFrame): DataFrame =
-    routed.groupBy("source", "sink", "day")
-      .agg(
-        count(lit(1)).as("n_rows"),
-        sum(when(col("is_corrupt"), 1L).otherwise(0L)).as("n_corrupt"),
-        approx_count_distinct(col("host")).as("approx_hosts"))
 }
 
 /**

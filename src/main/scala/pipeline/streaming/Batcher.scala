@@ -11,81 +11,24 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  * `examples/journald_to_s3batch_config.json:11-12` batchSize=100 +
  * flushFrequency=30s; `examples/windows/config_windows.json:33-34`).
  *
- * Built on `flatMapGroupsWithState` + event-time timeout: per-sink state is
- * (buffered count, first event-time, flush sequence), count-triggered
- * flushes emit inline, time-triggered flushes fire when the WATERMARK
- * passes firstTs + flushMs (event-time, so replays are deterministic),
- * and a timeout flush drains state that stopped receiving events.
+ * Built on `flatMapGroupsWithState` + event-time timeout: per-(sink, shard)
+ * state is (buffered payload lines, first event-time, flush sequence),
+ * count-triggered flushes emit inline, time-triggered flushes fire when the
+ * WATERMARK passes firstTs + flushMs (event-time, so replays are
+ * deterministic), and a timeout flush drains state that stopped receiving
+ * events.
  *
- * The state transition is a PURE function ([[Batcher.step]]) so flush
+ * The state transition is a PURE function ([[Batcher.transition]]) so flush
  * semantics are unit-testable without a streaming harness; the GroupState
  * shell only feeds it and stores the remainder.
  */
 object Batcher {
 
-  /** Per-sink buffer state. */
-  final case class BState(buffered: Long, firstTsMs: Long, seq: Long)
-
-  /** One flush record: `trigger` ∈ count | time | timeout. */
-  final case class Flush(sink: String, seq: Long, n_events: Long,
-                         first_ts_ms: Long, trigger: String)
-
-  /** One incoming buffered unit: events for a sink in this micro-batch.
-    * Carries the event-time column itself — the watermark rides on it. */
-  final case class In(sink: String, warc_ts: java.sql.Timestamp)
-
-  /** Map-side pre-combined unit: all of one input partition's events for a
-    * sink, as (count, min event-time, max event-time). */
-  final case class InAgg(sink: String, n: Long,
-                         minTs: java.sql.Timestamp, maxTs: java.sql.Timestamp)
-
-  /**
-   * Pure transition: previous state + `newN` new events (earliest at
-   * `newMinTs`) + current watermark → (flushes, remaining state).
-   * Full batches flush by count; the remainder flushes by time when the
-   * watermark has passed firstTs + flushMs, else it carries over.
-   *
-   * Approximation (deliberate, O(1) state): after count flushes drain full
-   * batches, the carried remainder INHERITS the buffer's first-event time
-   * — with count-only state the remainder's own earliest ts is unknowable
-   * without buffering per-event timestamps (unbounded state). The deadline
-   * therefore errs EARLY: a remainder can time-flush sooner than flushFreq
-   * after its own arrival, never later — which preserves the reference's
-   * latency bound ("flush at most flushFreq after buffering").
-   * `first_ts_ms` on a flush record is the buffer epoch, not necessarily
-   * the earliest event inside that specific flush.
-   */
-  def step(sink: String, prev: Option[BState], newN: Long, newMinTs: Long,
-           batchSize: Int, flushMs: Long, watermarkMs: Long): (Seq[Flush], Option[BState]) = {
-    val total = prev.map(_.buffered).getOrElse(0L) + newN
-    val firstTs = prev.map(_.firstTsMs).filter(_ > 0)
-      .map(math.min(_, newMinTs)).getOrElse(newMinTs)
-    var seq = prev.map(_.seq).getOrElse(0L)
-    val flushes = Seq.newBuilder[Flush]
-    var remaining = total
-    while (remaining >= batchSize) {
-      flushes += Flush(sink, seq, batchSize, firstTs, "count")
-      seq += 1
-      remaining -= batchSize
-    }
-    if (remaining > 0 && watermarkMs >= firstTs + flushMs) {
-      flushes += Flush(sink, seq, remaining, firstTs, "time")
-      seq += 1
-      remaining = 0
-    }
-    val next =
-      if (remaining == 0) {
-        // keep the sequence counter without an open buffer
-        if (seq == 0) None else Some(BState(0L, 0L, seq))
-      } else Some(BState(remaining, firstTs, seq))
-    (flushes.result(), next)
-  }
-
   /** One flushed EVENT batch: the JSON payload lines themselves — the
     * reference's destination semantics (buffer events, send the batch:
     * `examples/journald_to_s3batch_config.json:11-12`). `seq` is dense per
     * (sink, shard); [[batchId]] folds the shard in for a per-sink-unique
-    * Transport batch id. */
+    * Transport batch id. `trigger` ∈ count | time | timeout. */
   final case class EventFlush(sink: String, shard: Int, seq: Long,
                               trigger: String, first_ts_ms: Long,
                               payload: Seq[String]) {
@@ -105,22 +48,76 @@ object Batcher {
                         warc_ts: java.sql.Timestamp, line: String)
 
   /**
+   * Pure transition for one (sink, shard) key: previous state + this
+   * micro-batch's events (or a timeout) + the current watermark →
+   * (flushes, next state; None = remove the state).
+   *
+   *  - timeout: the watermark passed the buffer's deadline with no new
+   *    events — flush whatever is held;
+   *  - otherwise every event joins the buffer, which flushes by count the
+   *    moment it holds `batchSize` lines; the remainder flushes by time
+   *    when the watermark has passed firstTs + flushMs, else it carries
+   *    over.
+   *
+   * firstTs is PER BUFFER and resets when a count flush drains it, so a
+   * remainder's deadline counts from its own earliest event — exact, since
+   * the events are in hand.
+   */
+  def transition(sink: String, shard: Int, prev: Option[EBState],
+           events: Iterator[EvIn], timedOut: Boolean, batchSize: Int,
+           flushMs: Long, watermarkMs: Long): (Seq[EventFlush], Option[EBState]) =
+    if (timedOut) prev match {
+      case Some(st) if st.buffer.nonEmpty =>
+        (Seq(EventFlush(sink, shard, st.seq, "timeout", st.firstTsMs, st.buffer)),
+          Some(EBState(Vector.empty, 0L, st.seq + 1)))
+      case _ => (Nil, prev)
+    } else {
+      val out = Seq.newBuilder[EventFlush]
+      var firstTs = prev.map(_.firstTsMs).filter(_ > 0).getOrElse(Long.MaxValue)
+      var seq = prev.map(_.seq).getOrElse(0L)
+      var buf = prev.map(_.buffer.toVector).getOrElse(Vector.empty)
+      def flush(trigger: String): Unit = {
+        out += EventFlush(sink, shard, seq, trigger, firstTs, buf)
+        seq += 1
+        buf = Vector.empty
+        firstTs = Long.MaxValue
+      }
+      events.foreach { e =>
+        firstTs = math.min(firstTs, e.warc_ts.getTime)
+        buf :+= e.line
+        if (buf.length >= batchSize) flush("count")
+      }
+      if (buf.nonEmpty && watermarkMs >= firstTs + flushMs) flush("time")
+      // an empty buffer keeps only the sequence counter
+      val next =
+        if (buf.nonEmpty) Some(EBState(buf, firstTs, seq))
+        else if (seq == 0) None
+        else Some(EBState(Vector.empty, 0L, seq))
+      (out.result(), next)
+    }
+
+  /**
    * EVENT batcher: routed doc stream → per-sink batches of the actual
-   * payload lines, flushed on exactly the count/time/timeout triggers of
-   * [[step]] — this is what gives a streaming PUSH sink the reference's
+   * payload lines, flushed on the count/time/timeout triggers of
+   * [[transition]] — this is what gives a streaming PUSH sink the reference's
    * batchSize+flushFreq semantics (each [[EventFlush]] becomes ONE
    * Transport batch in pipeline.Streaming.startPushFlushes, so delivered
    * counts reconcile exactly with the batcher's accounting).
    *
-   * Scale note: unlike [[flushes]] (count-only state, map-side combined),
-   * buffering REAL events forces every routed row of a sink through that
-   * sink's stateful task — inherent to a single ordered buffer per
-   * destination (the reference daemon has the same structure). `shards > 1`
-   * splits each hot sink into (sink, shard) keys — deterministic per-line
-   * hash assignment — so a hot destination's buffering parallelizes across
-   * `shards` state tasks, each with its own dense `seq` (the Transport id
-   * folds the shard in, [[EventFlush.batchId]]). State stays bounded at
-   * batchSize−1 lines per key either way.
+   * Scale note: buffering REAL events forces every routed row of a sink
+   * through that sink's stateful task — inherent to a single ordered
+   * buffer per destination (the reference daemon has the same structure).
+   * `shards > 1` splits each hot sink into (sink, shard) keys —
+   * deterministic per-line hash assignment — so a hot destination's
+   * buffering parallelizes across `shards` state tasks, each with its own
+   * dense `seq` (the Transport id folds the shard in,
+   * [[EventFlush.batchId]]). State stays bounded at batchSize−1 lines per
+   * key either way.
+   *
+   * Rows without an event time (undecodable lines keep null warc_ts and
+   * route to deadletter) cannot participate in TIME-based flushing — they
+   * stay on the ledger/deadletter accounting path, and dereferencing the
+   * null here would kill the query.
    *
    * `watermarkDelay` tunes DEADLINE timing under cross-micro-batch
    * disorder. Measured (Spark 4.1.2, StreamingSpec): flatMapGroupsWithState
@@ -154,121 +151,15 @@ object Batcher {
       .flatMapGroupsWithState[EBState, EventFlush](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (key: (String, Int), events: Iterator[EvIn], state: GroupState[EBState]) =>
-          val (sink, shard) = key
-          val prev = state.getOption
-          val wm = state.getCurrentWatermarkMs()
-          val out = Seq.newBuilder[EventFlush]
-          var next: Option[EBState] = prev
-          if (state.hasTimedOut) {
-            val st = prev.get
-            if (st.buffer.nonEmpty) {
-              out += EventFlush(sink, shard, st.seq, "timeout", st.firstTsMs, st.buffer)
-              next = Some(EBState(Vector.empty, 0L, st.seq + 1))
-            }
-          } else {
-            // firstTs is PER BUFFER and resets when a count flush drains it
-            // (unlike the count-only [[step]], which cannot know the
-            // remainder's own earliest event and errs early by design —
-            // here the events are in hand, so the deadline is exact)
-            var firstTs = prev.map(_.firstTsMs).filter(_ > 0).getOrElse(Long.MaxValue)
-            var seq = prev.map(_.seq).getOrElse(0L)
-            var buf = prev.map(_.buffer.toVector).getOrElse(Vector.empty)
-            events.foreach { e =>
-              firstTs = math.min(firstTs, e.warc_ts.getTime)
-              buf :+= e.line
-              if (buf.length >= batchSize) {
-                out += EventFlush(sink, shard, seq, "count", firstTs, buf)
-                seq += 1
-                buf = Vector.empty
-                firstTs = Long.MaxValue
-              }
-            }
-            if (buf.nonEmpty && wm >= firstTs + flushMs) {
-              out += EventFlush(sink, shard, seq, "time", firstTs, buf)
-              seq += 1
-              buf = Vector.empty
-              firstTs = Long.MaxValue
-            }
-            next =
-              if (buf.isEmpty) { if (seq == 0) None else Some(EBState(Vector.empty, 0L, seq)) }
-              else Some(EBState(buf, firstTs, seq))
-          }
+          val (out, next) = transition(key._1, key._2, state.getOption, events,
+            state.hasTimedOut, batchSize, flushMs, state.getCurrentWatermarkMs())
           next match {
             case Some(st) =>
               state.update(st)
               if (st.buffer.nonEmpty) state.setTimeoutTimestamp(st.firstTsMs + flushMs)
             case None => state.remove()
           }
-          out.result().iterator
-      }
-  }
-
-  /** Streaming shell: routed doc stream → per-sink flush records. */
-  def flushes(routed: DataFrame, batchSize: Int, flushMs: Long): Dataset[Flush] = {
-    val spark = routed.sparkSession
-    import spark.implicits._
-    // rows without an event time (undecodable lines keep null warc_ts and
-    // route to deadletter) cannot participate in TIME-based flushing — they
-    // stay on the ledger/deadletter accounting path, and dereferencing the
-    // null here would kill the query
-    val in = routed
-      .filter(col("warc_ts").isNotNull)
-      .select(col("sink"), col("warc_ts"))
-      .as[In]
-    // MAP-SIDE COMBINE before the stateful shuffle: groupByKey(_.sink) has
-    // cardinality = #sinks, so without pre-aggregation every routed row of
-    // a sink funnels through ONE task (an O(rows)-through-one-core funnel).
-    // One narrow mapPartitions pass reduces each input partition to ≤#sinks
-    // (sink, n, minTs, maxTs) rows; the stateful shuffle then carries
-    // partitions×sinks rows and the single-task group iteration is O(that).
-    val combined = in.mapPartitions { it =>
-      val m = scala.collection.mutable.HashMap.empty[String, Array[Long]]
-      it.foreach { e =>
-        val t = e.warc_ts.getTime
-        val acc = m.getOrElseUpdate(e.sink, Array(0L, Long.MaxValue, Long.MinValue))
-        acc(0) += 1
-        if (t < acc(1)) acc(1) = t
-        if (t > acc(2)) acc(2) = t
-      }
-      m.iterator.map { case (s, a) =>
-        InAgg(s, a(0), new java.sql.Timestamp(a(1)), new java.sql.Timestamp(a(2)))
-      }
-    }
-      // the watermark rides the pre-combined MAX event time: max over
-      // partition maxima == max over rows, so the watermark (and therefore
-      // every time/timeout flush) advances exactly as in the row-level form
-      .withWatermark("maxTs", "0 seconds")
-    // NOTE state cardinality: one BState per SINK id — bounded by the
-    // configured destination set, so the zero-buffer rows kept to preserve
-    // the flush sequence counter are a handful, not a leak surface.
-    combined.groupByKey(_.sink)
-      .flatMapGroupsWithState[BState, Flush](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (sink: String, events: Iterator[InAgg], state: GroupState[BState]) =>
-          val prev = state.getOption
-          val wm = state.getCurrentWatermarkMs()
-          val (flushes, next) =
-            if (state.hasTimedOut) {
-              // drain: the watermark passed the buffer's deadline with no
-              // new events — flush whatever is held
-              val st = prev.get
-              if (st.buffered > 0)
-                (Seq(Flush(sink, st.seq, st.buffered, st.firstTsMs, "timeout")),
-                  Some(BState(0L, 0L, st.seq + 1)))
-              else (Nil, prev)
-            } else {
-              var n = 0L
-              var minTs = Long.MaxValue
-              events.foreach { e => n += e.n; minTs = math.min(minTs, e.minTs.getTime) }
-              step(sink, prev, n, minTs, batchSize, flushMs, wm)
-            }
-          next match {
-            case Some(st) =>
-              state.update(st)
-              if (st.buffered > 0) state.setTimeoutTimestamp(st.firstTsMs + flushMs)
-            case None => state.remove()
-          }
-          flushes.iterator
+          out.iterator
       }
   }
 }

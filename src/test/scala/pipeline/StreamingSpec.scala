@@ -26,7 +26,7 @@ class StreamingSpec extends AnyFunSuite {
     // land the fixture as several files so multiple micro-batches fire
     Webtext.df(s, N, 6).write.mode("overwrite").parquet(landing)
 
-    val q = Streaming.start(s, landing, out)
+    val q = Streaming.startDocs(Streaming.readWebtext(s, landing), out)
     q.awaitTermination() // AvailableNow terminates when caught up
 
     val got = s.read.parquet(s"$out/routed_stream").groupBy("sink").count()
@@ -47,7 +47,7 @@ class StreamingSpec extends AnyFunSuite {
 
     val listener = pipeline.streaming.StreamMetrics.attach(s, out)
     try {
-      val q = Streaming.start(s, landing, out)
+      val q = Streaming.startDocs(Streaming.readWebtext(s, landing), out)
       q.awaitTermination()
       // listener delivery is ASYNC (event bus): await the input rows
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
@@ -274,12 +274,12 @@ class StreamingSpec extends AnyFunSuite {
     val fs = new java.io.File(landing)
     fs.listFiles().foreach(f => ()) // keep dir as-is
 
-    val q1 = Streaming.start(s, s"$landing/p1", out)
+    val q1 = Streaming.startDocs(Streaming.readWebtext(s, s"$landing/p1"), out)
     q1.awaitTermination()
     val after1 = s.read.parquet(s"$out/routed_stream").count()
 
     // second run on the same checkpoint: nothing new → no new rows
-    val q2 = Streaming.start(s, s"$landing/p1", out)
+    val q2 = Streaming.startDocs(Streaming.readWebtext(s, s"$landing/p1"), out)
     q2.awaitTermination()
     val after2 = s.read.parquet(s"$out/routed_stream").count()
     assert(after1 == after2, "restart with no new data must not duplicate")
@@ -287,7 +287,7 @@ class StreamingSpec extends AnyFunSuite {
     // add new rows to the same dir → only the delta is appended
     Webtext.dataset(s, 1500, 2).filter(col("url").isNotNull)
       .write.mode("append").parquet(s"$landing/p1")
-    val q3 = Streaming.start(s, s"$landing/p1", out)
+    val q3 = Streaming.startDocs(Streaming.readWebtext(s, s"$landing/p1"), out)
     q3.awaitTermination()
     val after3 = s.read.parquet(s"$out/routed_stream").count()
     assert(after3 > after2)
