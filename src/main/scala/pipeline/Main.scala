@@ -72,17 +72,17 @@ object Pipeline {
   /** The shared narrow stage chain: parse → enrich → route.
     * Provenance: a `source` column is REQUIRED downstream (per-source
     * accounting, `examples/config.json:6-7`); inputs without one get the
-    * default tag. `observed = true` attaches the batcher/deadletter
-    * accounting metrics (pipeline.Metrics) to the parse stage — computed
-    * inline during the action, no extra pass. */
-  def transform(webtext: DataFrame, observed: Boolean = false,
+    * default tag. `parseObs` attaches the batcher/deadletter accounting
+    * metrics (pipeline.Metrics) to the parse stage — computed inline
+    * during the action, no extra pass. */
+  def transform(webtext: DataFrame, parseObs: Option[Observation] = None,
                 rules: Seq[RouteRule] = Route.defaultRules): DataFrame = {
     val spark = webtext.sparkSession
     val tagged =
       if (webtext.columns.contains("source")) webtext
       else webtext.withColumn("source", lit("webtext"))
     val parsed0 = Parse(tagged)
-    val parsed = if (observed) Metrics.observeParsed(parsed0) else parsed0
+    val parsed = parseObs.fold(parsed0)(Metrics.observeParsed(parsed0, _))
     val enriched = Enrich(parsed, Webtext.langMetaDf(spark), Webtext.geoDf(spark))
     Route(enriched, rules)
   }
@@ -138,17 +138,24 @@ object Pipeline {
   }
 
   /** The exact pre-write plan: transform → project (prunes `html` from the
-    * scan) → salted repartition. */
+    * scan) → salted repartition. `observed = true` observes the parse
+    * stage under [[Metrics.ObservationName]]. */
   def fusedPlan(webtext: DataFrame, writeTasks: Int, observed: Boolean = false,
                 rules: Seq[RouteRule] = Route.defaultRules): DataFrame =
+    fusedPlan(webtext, writeTasks,
+      Option.when(observed)(Observation(Metrics.ObservationName)), rules)
+
+  private def fusedPlan(webtext: DataFrame, writeTasks: Int,
+                        parseObs: Option[Observation], rules: Seq[RouteRule]): DataFrame =
     saltedWritePartitioning(
-      transform(webtext, observed, rules).select(outCols: _*), Some(writeTasks))
+      transform(webtext, parseObs, rules).select(outCols: _*), Some(writeTasks))
 
   def runFused(spark: SparkSession, webtext: DataFrame, outDir: String,
                rules: Seq[RouteRule] = Route.defaultRules,
                audit: Boolean = false): Map[String, Long] = {
     val writeTasks = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val routed = fusedPlan(webtext, writeTasks, observed = true, rules)
+    val parseObs = Observation(Metrics.ObservationName)
+    val routed = fusedPlan(webtext, writeTasks, Some(parseObs), rules)
     val sinkNames = sinkNamesFor(rules)
     val io = new ParquetTableIO(outDir)
     val schema = routed.schema // explicit on read-back: empty writes have no files to infer from
@@ -162,6 +169,9 @@ object Pipeline {
     }
     val ledger = new Ledger(outDir)
     counts.foreach { case (s, n) => ledger.commit(s"fused/sink=$s", n) }
+    val parsed = Metrics.parsedCounts(parseObs)
+    ledger.append(Ledger.Record(kind = Some("parse"), rows = parsed("events_in"),
+      counts = parsed))
     counts
   }
 

@@ -1,13 +1,7 @@
 package pipeline
 
-import java.util.concurrent.ConcurrentHashMap
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /**
  * In-flight pipeline metrics via `Dataset.observe` — the Spark-native form
@@ -16,45 +10,30 @@ import org.apache.spark.sql.util.QueryExecutionListener
  * logging or in metrics"; kawa deadletter path).
  *
  * `observe` attaches aggregates to the plan that are computed DURING the
- * action (no extra pass, unlike a separate count job); a listener collects
- * them per named observation. Works identically in batch and streaming
- * (streaming surfaces them in StreamingQueryProgress).
+ * action (no extra pass, unlike a separate count job); the Observation
+ * hands them back once the action ran. Works identically in batch and
+ * streaming (streaming surfaces them in StreamingQueryProgress).
  */
 object Metrics {
 
   val ObservationName = "graft_pipeline"
 
   /** events_in / parsed_ok / corrupt (deadletter-bound) / oversize, counted
-    * inline on the parsed stream. */
-  def observeParsed(parsed: DataFrame): DataFrame =
+    * inline on the parsed stream; read back with [[parsedCounts]]. */
+  def observeParsed(parsed: DataFrame, obs: Observation): DataFrame =
     parsed.observe(
-      ObservationName,
+      obs,
       count(lit(1)).as("events_in"),
       sum(when(!col("is_corrupt"), 1L).otherwise(0L)).as("parsed_ok"),
       sum(when(col("is_corrupt"), 1L).otherwise(0L)).as("deadletter"),
       max(octet_length(col("text"))).as("max_event_bytes"))
 
-  /** Collects observed metrics keyed by observation name. */
-  final class Collector extends QueryExecutionListener {
-    private val metrics = new ConcurrentHashMap[String, Map[String, Any]]()
+  /** [[observeParsed]] under a fresh observation named [[ObservationName]]. */
+  def observeParsed(parsed: DataFrame): DataFrame =
+    observeParsed(parsed, Observation(ObservationName))
 
-    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-      qe.observedMetrics.foreach { case (name, row) =>
-        val m = row.schema.fieldNames.zipWithIndex
-          .map { case (f, i) => f -> row.get(i) }.toMap
-        metrics.put(name, m)
-      }
-    }
-    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-
-    def get(name: String = ObservationName): Option[Map[String, Any]] =
-      Option(metrics.get(name))
-    def all: Map[String, Map[String, Any]] = metrics.asScala.toMap
-  }
-
-  def register(spark: SparkSession): Collector = {
-    val c = new Collector
-    spark.listenerManager.register(c)
-    c
-  }
+  /** The four parse counts once the observed action ran; an empty input's
+    * null sums and max read as 0. */
+  def parsedCounts(obs: Observation): Map[String, Long] =
+    obs.get.map { case (k, v) => k -> Option(v).fold(0L)(_.asInstanceOf[Number].longValue) }
 }

@@ -69,37 +69,29 @@ object Streaming {
     * [[startImagesNearDedup]]) runs in: query `<prefix>_%08x` of
     * `outDir.hashCode`, checkpoint `outDir/_checkpoint`, AvailableNow, and
     * per micro-batch `writeBatch`'s per-sink counts committed to the ledger
-    * (unit "batch-<id>") and appended as `sink` rows to the metrics table.
+    * as unit "batch-<id>", with this query's name — the `sink` rows of
+    * streaming.StreamMetrics.load.
     *
     * The query name lets the metrics table's `query` column correlate the
-    * listener's input/late rows (keyed by progress.name) with the
-    * foreachBatch sink rows. Derived from outDir so it is (a) STABLE across
-    * restarts — a re-executed micro-batch after a crash must hit the same
-    * idempotence key in StreamMetrics, which a random name would defeat —
-    * and (b) distinct for concurrent streams (distinct outDirs — they
-    * cannot legally share one: same checkpointLocation). The metrics TABLE
-    * may be shared across a daemon's queries via `metricsDir` (default:
-    * this query's outDir): the sinkWriter role fence keys every row by this
-    * query, so N queries writing one table stay disjoint. */
-  private def startDaemon(stream: DataFrame, outDir: String, prefix: String,
-                          metricsDir: String = "")(
+    * listener's input/late records (keyed by progress.name) with the
+    * batch commits. Derived from outDir so it is (a) STABLE across
+    * restarts — a re-executed micro-batch after a crash must supersede its
+    * old commit under the ledger's last-wins rule — and (b) distinct for
+    * concurrent streams (distinct outDirs — they cannot legally share one:
+    * same checkpointLocation). */
+  private def startDaemon(stream: DataFrame, outDir: String, prefix: String)(
       writeBatch: (DataFrame, Long) => Map[String, Long]): StreamingQuery = {
     val qname = f"${prefix}_${outDir.hashCode & 0x7fffffff}%08x"
     val ledger = new io.Ledger(outDir)
-    val metrics = streaming.StreamMetrics.sinkWriter(
-      if (metricsDir.nonEmpty) metricsDir else outDir, qname)
     stream.writeStream
       .queryName(qname)
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val counts = writeBatch(batch, batchId)
-        ledger.commit(s"batch-$batchId", counts.values.sum, counts)
-        // `input`/`late` rows come from the progress listener
-        // (streaming.StreamMetrics.attach)
-        counts.foreach { case (sink, n) =>
-          metrics.append(batchId, qname, "sink", sink, n)
-        }
+        ledger.append(io.Ledger.Record(unit = Some(s"batch-$batchId"),
+          batchId = Some(batchId), query = Some(qname), rows = counts.values.sum,
+          counts = counts))
       }
       .start()
   }
@@ -111,8 +103,7 @@ object Streaming {
     * (rules + deadletter), so they are plain conditional aggregates; the
     * old persist + separate sinkCounts action doubled the per-batch work. */
   def startDocs(docStream: DataFrame, outDir: String,
-                rules: Seq[stages.RouteRule] = stages.Route.defaultRules,
-                metricsDir: String = ""): StreamingQuery =
+                rules: Seq[stages.RouteRule] = stages.Route.defaultRules): StreamingQuery =
     startDaemon(
       docStream
         // streaming metrics surface: the same observe() counters as the
@@ -120,7 +111,7 @@ object Streaming {
         .observe("graft_stream_in",
           count(lit(1)).as("events_in"),
           max(octet_length(col("text"))).as("max_event_bytes")),
-      outDir, "routed_docs", metricsDir)(routedBatchWriter(outDir, rules))
+      outDir, "routed_docs")(routedBatchWriter(outDir, rules))
 
   /** The micro-batch body of every routed-docs daemon ([[startDocs]],
     * [[startDocsNearDedup]]): the batch stage chain and a partitioned
@@ -174,7 +165,7 @@ object Streaming {
    * band-owner state with the batch `bit_count(xor)` verify) feeds a
    * foreachBatch that [[streaming.NearDedup.finalizeImage]]s the keep
    * decision and lands kept docs (binary payload intact) partitioned by
-   * day, with the same ledger + stream-metrics accounting every other
+   * day, with the same ledger accounting every other
    * daemon uses. No parse→route chain here: an image corpus does not run
    * the html text extractors — curation IS the delivery.
    */

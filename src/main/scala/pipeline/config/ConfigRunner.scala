@@ -133,8 +133,7 @@ object ConfigRunner {
         throw new IllegalArgumentException(s"no input bound for source '${s.id}'"))
       fromSource(s, raw)
     }
-    Pipeline.transform(applyTransforms(spec, Sources.fanIn(srcs)),
-      observed = false, rules = rules(spec))
+    Pipeline.transform(applyTransforms(spec, Sources.fanIn(srcs)), rules = rules(spec))
   }
 
   /** The ordered corpus transforms (our extension) over the fanned-in doc
@@ -257,8 +256,8 @@ object ConfigRunner {
    * raise their own config-shaped refusal, pointing here.
    *
    * Returns exact per-sink delivered counts summed over all micro-batches
-   * (from the stream-metrics table the foreachBatch writer feeds — no
-   * read-back scan of the written data).
+   * (from the ledger's batch commits — no read-back scan of the written
+   * data).
    */
   def runStream(spark: SparkSession, cfgPath: String,
                 conf: Map[String, String]): Map[String, Long] = {
@@ -316,12 +315,9 @@ object ConfigRunner {
       case None => pipeline.Streaming.startDocs(docs, outDir, rules = rs)
     }
     q.awaitTermination()
-    // exact per-sink totals from the metrics table (last-wins per
-    // (batch, query, sink) — replays supersede, never double-count)
-    pipeline.streaming.StreamMetrics.load(spark, outDir)
-      .filter(col("kind") === "sink")
-      .groupBy("name").agg(sum("rows").as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // exact per-sink totals from the batch commits (a replayed batch
+    // supersedes its old commit, never double-counts)
+    new Ledger(outDir).commits().flatMap(_.counts).groupMapReduce(_._1)(_._2)(_ + _)
   }
 
   /** Raw frame in the wire shape each source kind consumes. With

@@ -57,7 +57,7 @@ object Push {
   final class FlakyTransport(inner: Transport, failures: Int) extends Transport {
     private val token = java.util.UUID.randomUUID().toString
     override def send(sinkId: String, batchIndex: Long, lines: Seq[String]): Unit = {
-      if (FlakyTransport.counterFor(token).incrementAndGet() <= failures)
+      if (FlakyTransport.attempts(token).incrementAndGet() <= failures)
         throw new RuntimeException(s"injected transport failure")
       inner.send(sinkId, batchIndex, lines)
     }
@@ -66,7 +66,7 @@ object Push {
   object FlakyTransport {
     private val counters =
       new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-    private def counterFor(token: String) =
+    private def attempts(token: String) =
       counters.computeIfAbsent(token, _ => new java.util.concurrent.atomic.AtomicLong(0))
   }
 

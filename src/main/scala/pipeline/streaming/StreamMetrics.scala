@@ -1,125 +1,37 @@
 package pipeline.streaming
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.types._
+
+import pipeline.io.Ledger
+import pipeline.io.Ledger.Record
 
 /**
  * Queryable streaming metrics table — the streaming twin of the batch
  * path's observe()+ledger accounting (the reference exposes per-source/
- * sink counters as its ops surface, `examples/config.json:6-7`; round-3
- * streaming only LOGGED progress JSON, queryable nowhere).
+ * sink counters as its ops surface, `examples/config.json:6-7`).
  *
- * One JSON line per (micro-batch, metric) appended driver-side (the
- * Ledger pattern — listeners and foreachBatch both run on the driver):
+ * A view of the outDir's run record ([[pipeline.io.Ledger]]), one row per
+ * (micro-batch, metric):
  *
- *   {"seq":N,"batch_id":N,"query":"...","kind":"input|late|sink",
- *    "name":"...","rows":N,"ts":"..."}
+ *   seq, batch_id, query, kind = input|late|sink, name, rows, ts
  *
  *  - `input`: the observed `graft_stream_in` events_in of the micro-batch
  *    (from StreamingQueryProgress.observedMetrics — exact, computed
- *    during the batch, no second action);
+ *    during the batch, no second action), a listener record ([[attach]]);
  *  - `late`: Σ state-operator numRowsDroppedByWatermark — rows an
- *    event-time stateful op dropped this batch (0 when stateless);
- *  - `sink`: per-sink routed counts appended by the foreachBatch writer —
- *    the SAME numbers the ledger commits, so the two surfaces reconcile
- *    exactly (StreamingSpec asserts it).
+ *    event-time stateful op dropped this batch (0 when stateless), a
+ *    listener record;
+ *  - `sink`: the per-sink counts of the `batch-<id>` commit — the SAME
+ *    record the ledger's commit readers read, so the two cannot diverge.
  *
- * Load with [[StreamMetrics.load]]; `kind=sink` rows grouped by name must
- * equal the ledger's per-sink totals.
+ * `seq` is the record's position in the ledger, after the ledger's
+ * last-wins rule dropped the records a replay superseded.
  */
-final class StreamMetrics(dir: String,
-    allowedKinds: Set[String] = StreamMetrics.SinkKinds,
-    role: String = StreamMetrics.AnyRole) {
-
-  import pipeline.io.Jsonl.esc
-
-  private val file: Path = Paths.get(dir, "stream_metrics.jsonl")
-  Files.createDirectories(file.getParent)
-
-  // LAST-WINS semantics, the Ledger contract: every append carries a
-  // strictly increasing `seq` (a per-FILE counter shared by every writer
-  // of this table in the JVM, resumed from the file on first touch, so
-  // restarts keep ascending) and [[StreamMetrics.load]] keeps only the
-  // highest-seq row per (batch_id, query, kind, name). A foreachBatch
-  // re-execution after a mid-batch failure, a listener re-emission after
-  // restart, or a full reprocess after a deleted checkpoint (batch ids
-  // restarting at 0) each just supersede the older row — exactly how
-  // Ledger.committedRows' unit-keyed toMap resolves its duplicates, so
-  // the two surfaces cannot diverge on replay. (A write-side first-wins
-  // dedup — the first round-4 design — silently dropped every row of a
-  // reprocessed outDir and could collide distinct keys via its joined
-  // string key. A per-INSTANCE seq — the round-5 design — made two
-  // writers on one file able to TIE on (seq, key), which is why the
-  // counter lives in the per-file registry now.)
-  private val seq = StreamMetrics.counterFor(file)
-
-  /** WRITER-ROLE invariant (generalizes round-5's one-writer-per-kind):
-    * the last-wins load is deterministic because no two writers ever
-    * produce the same (batch, query, kind, name) key — seq ties are
-    * structurally impossible (the counter is shared per file) and
-    * same-key interleavings resolve to the latest append, but a shared
-    * table across CONCURRENT QUERIES additionally needs each sink-kind
-    * writer fenced to its own query: a writer constructed with a concrete
-    * `role` may only append rows whose `query` IS that role (use
-    * [[StreamMetrics.sinkWriter]]), so query A's writer can never
-    * supersede query B's counts. The listener writer keeps the disjoint
-    * kind space instead (input/late vs sink), with roles free — one
-    * listener serves every query on the session. */
-  def append(batchId: Long, query: String, kind: String, name: String,
-             rows: Long): Unit = {
-    require(allowedKinds.contains(kind),
-      s"StreamMetrics writer for kinds $allowedKinds got kind '$kind' — " +
-        "one writer instance per kind space (see SinkKinds/ListenerKinds)")
-    require(role == StreamMetrics.AnyRole || query == role,
-      s"StreamMetrics writer for query-role '$role' got query '$query' — " +
-        "one sink writer per query (see StreamMetrics.sinkWriter)")
-    // the seq draw and the file append are one atomic step per file (the
-    // registry lock), so on-disk seq order == append order across writers
-    seq.synchronized {
-      pipeline.io.Jsonl.appendLine(file,
-        s"""{"seq":${seq.getAndIncrement()},"batch_id":$batchId,"query":"${esc(query)}","kind":"${esc(kind)}","name":"${esc(name)}","rows":$rows,"ts":"${java.time.Instant.now()}"}""")
-    }
-  }
-
-  def path: String = file.toString
-}
-
 object StreamMetrics {
-
-  /** Kind space of the foreachBatch sink-count writer. */
-  val SinkKinds: Set[String] = Set("sink")
-  /** Kind space of the progress-listener writer ([[attach]]). */
-  val ListenerKinds: Set[String] = Set("input", "late")
-  /** Role wildcard: writer not fenced to one query (the listener). */
-  val AnyRole: String = "*"
-
-  // per-file registry: ONE monotone seq counter per metrics table in this
-  // JVM (seeded from the file's max seq on first touch), shared by every
-  // writer — a daemon's N named queries + the listener all draw from it,
-  // so replayed rows strictly supersede and two writers can never tie
-  private val SeqRe = """"seq":(\d+)""".r
-  private val counters =
-    scala.collection.concurrent.TrieMap.empty[Path, java.util.concurrent.atomic.AtomicLong]
-  private def counterFor(file: Path): java.util.concurrent.atomic.AtomicLong =
-    counters.getOrElseUpdate(file.toAbsolutePath.normalize(), {
-      var mx = -1L
-      if (Files.exists(file))
-        Files.readAllLines(file, UTF_8).forEach { l =>
-          SeqRe.findFirstMatchIn(l).foreach(m => mx = math.max(mx, m.group(1).toLong))
-        }
-      new java.util.concurrent.atomic.AtomicLong(mx + 1)
-    })
-
-  /** Sink-count writer FENCED to one query — the multi-query-daemon form:
-    * every concurrent query gets its own writer on the shared table, and
-    * the role fence makes cross-query key collisions structurally
-    * impossible (not merely unlikely). */
-  def sinkWriter(dir: String, queryName: String): StreamMetrics =
-    new StreamMetrics(dir, SinkKinds, queryName)
 
   val schema: StructType = StructType(Seq(
     StructField("seq", LongType),
@@ -130,34 +42,28 @@ object StreamMetrics {
     StructField("rows", LongType),
     StructField("ts", StringType)))
 
-  /** The metrics table as a DataFrame (empty-safe): highest-seq row per
-    * (batch_id, query, kind, name) — replayed/reprocessed rows supersede
-    * their predecessors (last-wins, the Ledger contract). */
+  /** The metrics table of `dir`'s ledger as a DataFrame (empty-safe). */
   def load(spark: SparkSession, dir: String): DataFrame = {
-    val p = Paths.get(dir, "stream_metrics.jsonl")
-    if (!Files.exists(p))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("batch_id", "query", "kind", "name")
-        .orderBy(org.apache.spark.sql.functions.col("seq").desc)
-      spark.read.schema(schema).json(p.toString)
-        .withColumn("_rn", org.apache.spark.sql.functions.row_number().over(w))
-        .filter(org.apache.spark.sql.functions.col("_rn") === 1)
-        .drop("_rn")
+    val rows = new Ledger(dir).records().zipWithIndex.flatMap {
+      case (Record(None, Some(kind @ ("input" | "late")), Some(b), Some(q), Some(name), n, _, ts), i) =>
+        Seq(Row(i.toLong, b, q, kind, name, n, ts))
+      case (Record(Some(_), None, Some(b), Some(q), None, _, counts, ts), i) =>
+        counts.toSeq.map { case (sink, n) => Row(i.toLong, b, q, "sink", sink, n, ts) }
+      case _ => Nil
     }
+    spark.createDataFrame(rows.asJava, schema)
   }
 
   /**
    * Attach a progress listener feeding the metrics table: one `input` row
    * (observed events_in) and one `late` row (Σ numRowsDroppedByWatermark)
-   * per micro-batch of every query on this session. Remove with
-   * `spark.streams.removeListener` when done — listener delivery is
-   * ASYNCHRONOUS (an event bus), so tests must await the expected rows,
-   * not assume them on awaitTermination.
+   * per micro-batch of every query on this session, appended to `dir`'s
+   * ledger. Remove with `spark.streams.removeListener` when done —
+   * listener delivery is ASYNCHRONOUS (an event bus), so tests must await
+   * the expected rows, not assume them on awaitTermination.
    */
   def attach(spark: SparkSession, dir: String): StreamingQueryListener = {
-    val m = new StreamMetrics(dir, ListenerKinds)
+    val ledger = new Ledger(dir)
     val l = new StreamingQueryListener {
       override def onQueryStarted(
           e: StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -166,13 +72,14 @@ object StreamMetrics {
       override def onQueryProgress(
           e: StreamingQueryListener.QueryProgressEvent): Unit = {
         val p = e.progress
-        val qname = Option(p.name).getOrElse(p.id.toString)
+        def note(kind: String, name: String, rows: Long): Unit =
+          ledger.append(Record(kind = Some(kind), batchId = Some(p.batchId),
+            query = Some(Option(p.name).getOrElse(p.id.toString)), name = Some(name),
+            rows = rows))
         val obs = p.observedMetrics
         if (obs.containsKey("graft_stream_in"))
-          m.append(p.batchId, qname, "input", "events_in",
-            obs.get("graft_stream_in").getAs[Long]("events_in"))
-        val late = p.stateOperators.map(_.numRowsDroppedByWatermark).sum
-        m.append(p.batchId, qname, "late", "dropped_by_watermark", late)
+          note("input", "events_in", obs.get("graft_stream_in").getAs[Long]("events_in"))
+        note("late", "dropped_by_watermark", p.stateOperators.map(_.numRowsDroppedByWatermark).sum)
       }
     }
     spark.streams.addListener(l)

@@ -642,8 +642,11 @@ class ConfigRunnerSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == batchCounts && got.values.sum > 0,
       s"stream $got vs batch $batchCounts")
-    // ledger reconciles with the metrics-table counts runStream returned
+    // the commits' totals agree with the per-sink counts runStream returned,
+    // and the ledger is the outDir's one accounting file
     assert(new pipeline.io.Ledger(out).committedRows().values.sum == got.values.sum)
+    assert(!Files.exists(java.nio.file.Paths.get(out, "stream_metrics.jsonl")) &&
+      Files.exists(java.nio.file.Paths.get(out, "ledger.jsonl")))
     // push-kind sinks are refused config-shaped in --stream mode
     val pushSpec = spec.copy(sinks = spec.sinks :+
       pipeline.config.SinkSpec("hook", "webhook"))
@@ -883,6 +886,32 @@ class ConfigRunnerSpec extends AnyFunSuite {
       java.nio.file.Paths.get(dir, "ledger.jsonl"))
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     lines.forEach(l => assert(om.readTree(l).hasNonNull("unit")))
+  }
+
+  test("ledger: commits interleaved with input/late/parse records resume as commits alone") {
+    import pipeline.io.Ledger
+    val plain = Files.createTempDirectory("ledger-plain").toString
+    val mixed = Files.createTempDirectory("ledger-mixed").toString
+    val commits = Seq("_staged" -> 300L, "2026-01-01" -> 120L, "batch-0" -> 7L,
+      "2026-01-02" -> 180L, "2026-01-01" -> 121L) // a rerun unit: last wins
+    val others = Seq(
+      Ledger.Record(kind = Some("input"), batchId = Some(0L), query = Some("q"),
+        name = Some("events_in"), rows = 5L),
+      Ledger.Record(kind = Some("late"), batchId = Some(0L), query = Some("q"),
+        name = Some("dropped_by_watermark"), rows = 0L),
+      Ledger.Record(kind = Some("parse"), rows = 300L,
+        counts = Map("events_in" -> 300L, "parsed_ok" -> 297L, "deadletter" -> 3L)))
+    commits.zipWithIndex.foreach { case ((u, n), i) =>
+      new Ledger(plain).commit(u, n)
+      new Ledger(mixed).append(others(i % others.size))
+      new Ledger(mixed).commit(u, n)
+    }
+    others.foreach(new Ledger(mixed).append(_))
+    val (p, m) = (new Ledger(plain), new Ledger(mixed))
+    assert(m.committedUnits() == p.committedUnits())
+    assert(m.committedRows() == p.committedRows())
+    assert(p.committedRows() == commits.toMap)
+    assert(m.records().count(_.unit.isEmpty) == others.size)
   }
 
   test("mqtt source carries bus metadata columns through decode") {

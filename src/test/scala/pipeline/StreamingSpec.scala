@@ -60,8 +60,8 @@ class StreamingSpec extends AnyFunSuite {
       val totalIn = m.filter(col("kind") === "input")
         .agg(sum(col("rows"))).head().getLong(0)
       assert(totalIn == 1200L, s"observed input $totalIn")
-      // sink rows: exactly the ledger's per-sink totals (same numbers,
-      // two surfaces — queryable table vs lineage trail)
+      // sink rows: exactly the ledger's per-sink totals (the table reads
+      // the batch commits' counts)
       val perSink = m.filter(col("kind") === "sink").groupBy("name")
         .agg(sum(col("rows")).as("n")).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -85,89 +85,62 @@ class StreamingSpec extends AnyFunSuite {
       val qSink = m.filter(col("kind") === "sink")
         .select("query").distinct().collect().map(_.getString(0)).toSet
       assert(qIn == qSink && qIn.size == 1, s"query labels: in=$qIn sink=$qSink")
-      // replay semantics: a re-executed micro-batch (same batch/query/
-      // kind/name key) must not double-count — the replayed row SUPERSEDES
-      // the old one (last-wins by seq, the Ledger contract), from the same
-      // instance AND from a restart-fresh one
-      val sm = new pipeline.streaming.StreamMetrics(out)
+      // replay semantics: a re-executed micro-batch commits batch-0 again;
+      // the later commit SUPERSEDES the first (the ledger's last-wins rule)
+      // in both the commit readers and the table, adding no row
       val before = pipeline.streaming.StreamMetrics.load(s, out).count()
-      sm.append(0L, qIn.head, "sink", "s3", 999L) // replay: supersedes
-      new pipeline.streaming.StreamMetrics(out)
-        .append(0L, qIn.head, "sink", "s3", 1000L) // restart twin: supersedes
+      val first = new Ledger(out).commits().find(_.unit.contains("batch-0")).get
+      val replayed = first.counts.updated("s3", first.counts("s3") + 1000L)
+      new Ledger(out).append(pipeline.io.Ledger.Record(unit = Some("batch-0"),
+        batchId = Some(0L), query = Some(qIn.head), rows = replayed.values.sum,
+        counts = replayed))
+      val rows = new Ledger(out).committedRows()
+      assert(rows.size == ledger.size && rows("batch-0") == first.rows + 1000L,
+        s"replayed ledger $rows vs $ledger")
       val after = pipeline.streaming.StreamMetrics.load(s, out)
       assert(after.count() == before, "replays must not add rows")
       assert(after.filter(col("batch_id") === 0 && col("kind") === "sink" &&
-        col("name") === "s3").head().getAs[Long]("rows") == 1000L,
+        col("name") === "s3").head().getAs[Long]("rows") == replayed("s3"),
         "the latest replay's value must win")
+      // the ledger is the outDir's one accounting file
+      val files = Files.list(java.nio.file.Paths.get(out)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(Files.isRegularFile(_)).map(_.getFileName.toString).toSet
+      assert(files == Set("ledger.jsonl"), s"outDir files $files")
     } finally s.streams.removeListener(listener)
   }
 
-  test("stream metrics: writers declare disjoint kind spaces (one writer per kind)") {
-    // writers share one PER-FILE seq counter (the registry), so last-wins
-    // is deterministic; the kind-space split keeps the listener and the
-    // sink writers off each other's keys — append enforces the declared
-    // space (the r4 ADVICE finding)
-    val out = Files.createTempDirectory("graft-sm-roles").toString
-    val sink = new pipeline.streaming.StreamMetrics(out)
-    val listener = new pipeline.streaming.StreamMetrics(
-      out, pipeline.streaming.StreamMetrics.ListenerKinds)
-    sink.append(0L, "q", "sink", "s3", 1L)
-    listener.append(0L, "q", "input", "events_in", 1L)
-    listener.append(0L, "q", "late", "dropped_by_watermark", 0L)
-    intercept[IllegalArgumentException](sink.append(0L, "q", "input", "x", 1L))
-    intercept[IllegalArgumentException](listener.append(0L, "q", "sink", "s3", 2L))
-    assert(pipeline.streaming.StreamMetrics.SinkKinds
-      .intersect(pipeline.streaming.StreamMetrics.ListenerKinds).isEmpty)
-    // role fence (the multi-query registry, r5 VERDICT #5): a sinkWriter is
-    // bound to ITS query — appending under another query's name is a bug
-    // in the caller, rejected config-shaped, so two queries sharing one
-    // table can never supersede each other's counts
-    val qa = pipeline.streaming.StreamMetrics.sinkWriter(out, "qa")
-    qa.append(1L, "qa", "sink", "s3", 5L)
-    intercept[IllegalArgumentException](qa.append(1L, "qb", "sink", "s3", 5L))
-  }
-
-  test("stream metrics: two concurrent queries share one table (writer registry)") {
+  test("a sink named like a ledger field round-trips through the ledger and the table") {
     val s = sc
-    val landingA = Files.createTempDirectory("graft-mq-landing-a").toString
-    val landingB = Files.createTempDirectory("graft-mq-landing-b").toString
-    val outA = Files.createTempDirectory("graft-mq-out-a").toString
-    val outB = Files.createTempDirectory("graft-mq-out-b").toString
-    val shared = Files.createTempDirectory("graft-mq-metrics").toString
-    Webtext.df(s, 700, 4).write.mode("overwrite").parquet(landingA)
-    Webtext.df(s, 400, 4).write.mode("overwrite").parquet(landingB)
-    // the production daemon shape: N named queries (own outDir/checkpoint
-    // each), ONE queryable metrics table. Run CONCURRENTLY so appends
-    // interleave through the shared per-file seq counter.
-    val qa = Streaming.startDocs(
-      Streaming.readWebtext(s, landingA), outA, metricsDir = shared)
-    val qb = Streaming.startDocs(
-      Streaming.readWebtext(s, landingB), outB, metricsDir = shared)
-    qa.awaitTermination(); qb.awaitTermination()
-    val m = pipeline.streaming.StreamMetrics.load(s, shared)
-      .filter(col("kind") === "sink")
-    val perQuery = m.groupBy("query").agg(sum(col("rows")).as("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(perQuery.size == 2, s"expected 2 query labels, got $perQuery")
-    // EXACT per-query ledger reconciliation: each query's rows in the
-    // shared table == its own ledger's committed totals
-    val la = new Ledger(outA).committedRows().values.sum
-    val lb = new Ledger(outB).committedRows().values.sum
-    val nameA = f"routed_docs_${outA.hashCode & 0x7fffffff}%08x"
-    val nameB = f"routed_docs_${outB.hashCode & 0x7fffffff}%08x"
-    assert(perQuery(nameA) == la && perQuery(nameB) == lb,
-      s"shared-table per-query counts $perQuery vs ledgers a=$la b=$lb")
-    // last-wins still holds on the shared table: replay one query's batch
-    val before = pipeline.streaming.StreamMetrics.load(s, shared).count()
-    pipeline.streaming.StreamMetrics.sinkWriter(shared, nameA)
-      .append(0L, nameA, "sink", "s3", 123456L)
-    val after = pipeline.streaming.StreamMetrics.load(s, shared)
-    assert(after.count() == before, "replay on the shared table must not add rows")
-    assert(after.filter(col("query") === nameA && col("batch_id") === 0 &&
-      col("name") === "s3").head().getAs[Long]("rows") == 123456L)
-    // and the other query's rows are untouched
-    assert(after.filter(col("kind") === "sink" && col("query") === nameB)
-      .agg(sum(col("rows"))).head().getLong(0) == lb)
+    val landing = Files.createTempDirectory("graft-fieldsink-landing").toString
+    val out = Files.createTempDirectory("graft-fieldsink-out").toString
+    Webtext.df(s, 600, 2).write.mode("overwrite").parquet(landing)
+    // destination ids become sink names; `rows` and `unit` are also the
+    // names of a commit record's own fields
+    val rules = Seq(stages.RouteRule(col("status") >= 500, "rows"),
+      stages.RouteRule(lit(true), "unit"))
+    val q = Streaming.startDocs(
+      Streaming.readWebtext(s, landing, maxFilesPerTrigger = 1), out, rules)
+    q.awaitTermination()
+    val written = s.read.parquet(s"$out/routed_stream").groupBy("sink").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(written.keySet == Set("rows", "unit", "deadletter"), s"written $written")
+    val ledger = new Ledger(out)
+    val batches = ledger.committedRows()
+    assert(batches.keySet.forall(_.startsWith("batch-")) && batches.size == 2,
+      s"commits $batches")
+    assert(batches.values.sum == written.values.sum)
+    // a standard reader sees each commit's own total, not a sink's count
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    java.nio.file.Files.readAllLines(java.nio.file.Paths.get(out, "ledger.jsonl"))
+      .forEach { l =>
+        val o = om.readTree(l)
+        assert(o.get("rows").asLong == batches(o.get("unit").asText), s"line $l")
+      }
+    assert(ledger.commits().flatMap(_.counts).groupMapReduce(_._1)(_._2)(_ + _) == written)
+    val table = pipeline.streaming.StreamMetrics.load(s, out)
+      .filter(col("kind") === "sink").groupBy("name").agg(sum("rows"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(table == written, s"table $table vs written $written")
   }
 
   test("stream metrics: watermark-dropped rows surface in the late counter") {
